@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -22,6 +23,28 @@ def spark():
     s = get_spark(master="local[4]", app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs(group) as ids:`` fills ``ids`` with the Spark jobs
+    the block started.  The job group is cleared on exit, so no later test
+    inherits it."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run(group: str):
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc._jsc.clearJobGroup()  # PySpark has no clearJobGroup
+            # job starts reach the status tracker through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -3,7 +3,11 @@ replay idempotence (ST6), O(delta) bucket-scoped rewrites."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+
+import pytest
 
 from tests.oracle_check import canonical_rows
 from uncharted_ta1_spark.plans.merge import current_manifest, merge_upsert, read_current
@@ -237,9 +241,15 @@ def test_expire_snapshots_reclaims_unreferenced_files(spark, tmp_path):
 
 def test_schema_evolution_add_and_omit_column(spark, tmp_path):
     """Iceberg add-column analog: a later batch may ADD a column (old rows
-    read NULL) or OMIT one (new rows read NULL); reads merge footer
-    schemas; time-travel of the pre-evolution snapshot is unaffected."""
+    read NULL) or OMIT one (new rows read NULL); reads use the schema each
+    manifest records, which matches a footer-merging read of the same
+    files; time-travel of the pre-evolution snapshot is unaffected."""
     from uncharted_ta1_spark.plans.merge import read_snapshot
+
+    def merged_read(manifest):
+        paths = [os.path.join(t, e["path"]) for _, e in sorted(
+            manifest["buckets"].items(), key=lambda kv: int(kv[0]))]
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     t = str(tmp_path / "tbl_evolve")
     merge_upsert(spark, t, _df(spark, [("a", "op", 1), ("b", "op", 2)]), ["doc_id", "op_id"])
@@ -262,6 +272,29 @@ def test_schema_evolution_add_and_omit_column(spark, tmp_path):
     # the v0 snapshot still reads with its original 3-column schema
     snap0 = read_snapshot(spark, t, 0)
     assert set(snap0.columns) == {"doc_id", "op_id", "payload"}
+
+    # same names, order and types as inferring the schema from the footers
+    cur = read_current(spark, t)
+    assert cur.dtypes == merged_read(current_manifest(t)).dtypes
+    with open(os.path.join(t, "v0.manifest.json")) as f:
+        assert snap0.dtypes == merged_read(json.load(f)).dtypes
+
+
+def test_merge_refuses_duplicate_current_rows(spark, tmp_path):
+    """A key with two current rows breaks the table invariant: the commit
+    must raise instead of reporting a negative insert count, and must not
+    publish a new snapshot."""
+    t = str(tmp_path / "tbl_dup")
+    merge_upsert(spark, t, _df(spark, [("d1", "op", 1)]), ["doc_id", "op_id"])
+    # plant a second copy of the bucket's only data file
+    (bucket,) = current_manifest(t)["buckets"].values()
+    bdir = os.path.join(t, bucket["path"])
+    (part,) = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+    shutil.copyfile(os.path.join(bdir, part), os.path.join(bdir, "dup-" + part))
+
+    with pytest.raises(RuntimeError, match="more than one current row"):
+        merge_upsert(spark, t, _df(spark, [("d1", "op", 10)]), ["doc_id", "op_id"])
+    assert current_manifest(t)["version"] == 0
 
 
 def test_merge_delete_tombstones(spark, tmp_path):
@@ -311,25 +344,22 @@ def test_merge_delete_tombstones(spark, tmp_path):
     assert got2 == {"d2": 99, "d3": 33, "d4": 4}
 
 
-def test_merge_commit_counter_fusion_job_count(spark, tmp_path):
+def test_merge_commit_counter_fusion_job_count(spark, tmp_path, spark_jobs):
     """r07 fusion pin: the upsert counters ride the write action as observed
     metrics — a non-first commit must NOT run a dedicated counter
     aggregation action.  AQE splits each action into one job per
     materialized stage, so the pin is the measured envelope: the fused
-    commit runs 10 jobs on this Spark version (delta localCheckpoint,
-    touched-bucket collect, mergeSchema footer read, and the staged write),
-    the pre-fusion path ran 14 (the counter join + aggregate stages)."""
+    commit runs 8 jobs on this Spark version (delta localCheckpoint,
+    touched-bucket collect and the staged write).  It ran 9 while the
+    touched buckets were read with a mergeSchema footer-inference job; they
+    now read with the schema the manifest records.  The pre-fusion path
+    ran 14 (the counter join + aggregate stages)."""
     t = str(tmp_path / "tbl_jobs")
     merge_upsert(spark, t, _df(spark, [("d1", "op", 1), ("d2", "op", 2)]), ["doc_id", "op_id"])
-    sc = spark.sparkContext
-    sc.setJobGroup("merge_fusion_pin", "second commit")
-    try:
+    with spark_jobs("merge_fusion_pin") as jobs:
         s = merge_upsert(
             spark, t, _df(spark, [("d2", "op", 20), ("d3", "op", 3)]),
             ["doc_id", "op_id"],
         )
-    finally:
-        sc.setJobGroup("merge_fusion_pin_done", "")
     assert s["rows_updated"] == 1 and s["rows_inserted"] == 1
-    jobs = sc.statusTracker().getJobIdsForGroup("merge_fusion_pin")
-    assert 0 < len(jobs) <= 10, f"counter fusion regressed: {len(jobs)} jobs"
+    assert 0 < len(jobs) <= 8, f"counter fusion regressed: {len(jobs)} jobs"

@@ -18,7 +18,9 @@ row count, per-column min/max harvested from parquet footer statistics), a
 commit writes new bucket files plus a new manifest and atomically flips a
 pointer file.  Reads prune on the manifest stats (`read_current(where=...)`)
 — Iceberg's data-file min/max skipping — so a selective range predicate
-opens only the buckets whose recorded range can match.  Readers of older snapshots are never
+opens only the buckets whose recorded range can match.  Each manifest also
+records the snapshot's Spark schema, so a read plans from metadata alone:
+no Spark job opens parquet footers to infer it.  Readers of older snapshots are never
 disturbed (data files are immutable once referenced).  On real Iceberg this
 whole module is `MERGE INTO t USING u ON keys WHEN MATCHED THEN UPDATE *
 WHEN NOT MATCHED THEN INSERT *` with snapshot isolation; bucket pruning is
@@ -37,6 +39,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from uncharted_ta1_spark.functions.portable import md5_i64
@@ -70,6 +73,37 @@ def _bucket_paths(target_dir: str, manifest: dict, buckets=None) -> list[str]:
     entries = manifest["buckets"]
     keys = sorted(entries, key=int) if buckets is None else [str(b) for b in buckets]
     return [os.path.join(target_dir, entries[k]["path"]) for k in keys if k in entries]
+
+
+def _snapshot_schema(manifest: dict) -> StructType:
+    """The Spark schema a commit recorded for its snapshot."""
+    if "schema" not in manifest:
+        raise ValueError(
+            f"manifest v{manifest['version']} records no schema; the table was "
+            "written by an older merge.py and must be rewritten"
+        )
+    return StructType.fromJson(manifest["schema"])
+
+
+def _read_buckets(spark: SparkSession, manifest: dict, paths: list[str]) -> DataFrame:
+    """Read bucket dirs with the snapshot's recorded schema: a column that
+    some files lack (added or omitted by a later commit) reads as NULL, and
+    no footer-inference job runs."""
+    return spark.read.schema(_snapshot_schema(manifest)).parquet(*paths)
+
+
+def _commit_schema(prev: dict | None, written: StructType) -> dict:
+    """Schema of the snapshot a commit produces, as ``schema.json()``: the
+    previous snapshot's columns in their order (typed as written, where the
+    commit wrote them), then the columns the commit added — the schema a
+    footer-merging read of the new snapshot would infer."""
+    cols = {f.name: f for f in written.fields if f.name != "_bucket"}
+    fields = []
+    if prev is not None:
+        for f in _snapshot_schema(prev).fields:
+            fields.append(cols.pop(f.name, f))
+    fields.extend(cols.values())
+    return json.loads(StructType(fields).json())
 
 
 def _stats_match(entry: dict, where: dict) -> bool:
@@ -137,8 +171,8 @@ def read_current(
     paths = _bucket_paths(target_dir, m, kept)
     if not paths:
         # everything pruned: an empty frame with the table's schema
-        return spark.read.parquet(all_paths[0]).where(F.lit(False))
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return _read_buckets(spark, m, all_paths[:1]).where(F.lit(False))
+    return _read_buckets(spark, m, paths)
 
 
 def read_snapshot(spark: SparkSession, target_dir: str, version: int) -> DataFrame:
@@ -149,9 +183,7 @@ def read_snapshot(spark: SparkSession, target_dir: str, version: int) -> DataFra
     """
     with open(_manifest_path(target_dir, version)) as f:
         m = json.load(f)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *_bucket_paths(target_dir, m)
-    )
+    return _read_buckets(spark, m, _bucket_paths(target_dir, m))
 
 
 def _json_stat(v):
@@ -263,9 +295,7 @@ def compact_table(
         raise ValueError(f"no table at {target_dir}")
     key_cols = manifest["key_cols"]
     nb = int(n_buckets) if n_buckets is not None else int(manifest["n_buckets"])
-    cur = spark.read.option("mergeSchema", "true").parquet(
-        *_bucket_paths(target_dir, manifest)
-    )
+    cur = _read_buckets(spark, manifest, _bucket_paths(target_dir, manifest))
     df = cur.withColumn("_bucket", _key_bucket(key_cols, nb))
 
     next_v = manifest["version"] + 1
@@ -297,6 +327,7 @@ def compact_table(
         "rows_updated": 0,
         "rows_inserted": 0,
         "compacted": True,
+        "schema": _commit_schema(manifest, df.schema),
         "buckets": entries,
     })
     return {
@@ -495,7 +526,7 @@ def merge_upsert(
         old_entries = dict(manifest["buckets"])
         tpaths = _bucket_paths(target_dir, manifest, touched)
         if tpaths:
-            cur = spark.read.option("mergeSchema", "true").parquet(*tpaths)
+            cur = _read_buckets(spark, manifest, tpaths)
             marks = keyed.select(*key_cols, "_del").withColumn("_u", F.lit(1))
             matched = F.col("_u").isNotNull()
             obs_cur = Observation()
@@ -509,7 +540,7 @@ def merge_upsert(
             # schema evolution (Iceberg add-column analog): a batch may carry
             # columns the table has never seen (old rows read as NULL) or
             # omit columns the table has (new rows get NULL) — the union
-            # fills both sides, and reads merge footer schemas across files
+            # fills both sides, and the manifest records the merged schema
             new_df = kept.unionByName(upd_obs, allowMissingColumns=True)
         else:
             new_df = upd_obs
@@ -532,6 +563,14 @@ def merge_upsert(
         n_updated = 0
         n_deleted = 0
     n_inserted = n_upserts - n_updated
+    if n_inserted < 0:
+        # the delta holds one row per key, so more matches than upserts
+        # means some key has several current rows; refuse to commit
+        raise RuntimeError(
+            f"table invariant broken at {target_dir}: {n_updated} current rows "
+            f"matched {n_upserts} upserted keys, so a key has more than one "
+            "current row; the commit was not published"
+        )
 
     entries = dict(old_entries)
     scols = list(stats_cols) if stats_cols is not None else list(key_cols)
@@ -556,6 +595,7 @@ def merge_upsert(
         "rows_updated": n_updated,
         "rows_inserted": n_inserted,
         "rows_deleted": n_deleted,
+        "schema": _commit_schema(manifest, new_df.schema),
         "buckets": entries,
     }
     # compare-and-swap commit with crash atomicity: the manifest is written

@@ -14,10 +14,15 @@ the checkpointed batch_id.  This is the standard storage-mediated pattern
 sees a consistent snapshot and the result is independent of how probes are
 batched — asserted by tests/test_streaming.py (stream == batch equality).
 
-Scale: each micro-batch costs ONE shuffle of |state-pruned| + |batch| rows
-(the batch as-of plan); for small probe batches the state side is pruned
-with a semi join on the batch's keys first, so steady-state serving cost is
-O(state rows of probed keys), not O(all state).
+Cost per micro-batch: ONE scan of the whole state, then ONE shuffle of the
+pruned state plus the batch.  A broadcast semi join on the batch's keys
+prunes the state before the shuffle; it cannot prune the scan, since a
+keyed table bucketed on its full key (e.g. ``(doc_id, source, seq_no)``)
+spreads every ``(doc_id, source)`` over all buckets.  Because serving
+state is always pruned to the probed keys, the lookup runs the as-of
+join's single-window core (the payload rides in the filled struct), not
+the thin-anchor path with its second state scan and payload join-back
+that bulk backfills over unpruned state need.
 """
 
 from __future__ import annotations
@@ -36,24 +41,22 @@ def asof_answer_batch(
     *,
     keys: list[str],
     payload_cols: list[str],
-    prune_state: bool = True,
 ) -> DataFrame:
     """Answer one probe batch with the leakage-free as-of lookup.
 
-    ``prune_state``: semi-join the state down to the batch's key set before
-    the as-of shuffle — the Bloom/DPP-style reduction that makes small
-    serving batches O(probed keys) instead of O(state).
+    The state is pruned to the batch's keys by a broadcast left-semi join
+    (a semi join emits each state row at most once, so duplicate batch keys
+    need no ``distinct``).  The pruned state is what makes the single-window
+    as-of core cheap here, so it is chosen explicitly.
     """
-    if prune_state:
-        state = state.join(
-            probe_batch.select(*keys).distinct(), keys, "left_semi"
-        )
+    pruned = state.join(F.broadcast(probe_batch.select(*keys)), keys, "left_semi")
     return asof_join(
-        state,
+        pruned,
         probe_batch,
         keys=keys,
         payload_cols=payload_cols,
         defaults={"tokens": F.array().cast("array<int>"), "n_tok": F.lit(-1)},
+        fetch_payload_via_join=False,
     )
 
 
