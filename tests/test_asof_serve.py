@@ -18,6 +18,9 @@ from uncharted_ta1_spark.streaming.asof_serve import asof_answer_batch
 TABLE_KEYS = ["doc_id", "source", "seq_no"]
 SERVE_KEYS = ["doc_id", "source"]
 PROBE_SCHEMA = "probe_id string, doc_id string, source string, ts_epoch long"
+# py4j commands to build one lookup plan: 555 measured (PySpark 4.1), 2,082
+# with PySpark's call-site capture on
+BUILD_ROUND_TRIPS_MAX = 700
 
 
 @pytest.fixture(scope="module")
@@ -87,3 +90,32 @@ def test_serve_lookup_scans_snapshot_once(spark, table, spark_jobs):
     final = plan.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final
     assert final.count("FileScan parquet") == 1, final
+
+
+def test_serve_lookup_plan_build_round_trips(spark, table, monkeypatch):
+    """Building a lookup's lazy plan stays cheap on the Python side.  With
+    PySpark's per-call call-site capture on (its default), the build made
+    ~2,100 py4j round trips; the engine session turns the capture off."""
+    import py4j.clientserver
+    import py4j.protocol
+    from pyspark.errors import utils as pyspark_errors_utils
+
+    batch = _batch(spark, table)
+    # PySpark caches the capture switch at the first wrapped call of the
+    # process; make this build read it from the session's conf
+    monkeypatch.setattr(pyspark_errors_utils, "_enable_debugging_cache", None)
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    sent = []
+
+    def counting(self, command):
+        # object releases run whenever Python's GC frees a proxy, so they
+        # depend on what earlier tests left behind; count the build's calls
+        if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(conn, "send_command", counting)
+    _answer(spark, table, batch)
+    monkeypatch.setattr(conn, "send_command", send)
+    assert len(sent) <= BUILD_ROUND_TRIPS_MAX, len(sent)

@@ -100,7 +100,9 @@ def test_mmr_driver_finish_equals_distributed_loop(spark):
     """r07 pin: the bounded-pool driver-side greedy finish must produce
     EXACTLY the distributed per-round loop's output (ranks, rel, score all
     bit-equal) — the two implementations answer the same spec and guard
-    each other."""
+    each other.  The second corpus has NULL embeddings inside the pool:
+    NULL ``rel`` and ``psim`` values, a query whose every score is NULL,
+    and NULL-scored picks that must sort last with ties by vid."""
     from pyspark.sql import functions as F
 
     import numpy as np
@@ -108,19 +110,26 @@ def test_mmr_driver_finish_equals_distributed_loop(spark):
     from uncharted_ta1_spark.operators.similarity import mmr_topk
 
     rng = np.random.RandomState(11)
-    rows = [
-        (i, [float(x) for x in rng.randn(8)]) for i in range(40)
-    ] + [(200, [float(x) for x in rng.randn(8)]), (201, [float(x) for x in rng.randn(8)])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def vec():
+        return [float(x) for x in rng.randn(8)]
+
+    dense = [(i, vec()) for i in range(40)] + [(200, vec()), (201, vec())]
+    with_nulls = [(i, None if i in (1, 4) else vec()) for i in range(7)] + [
+        (200, vec()),
+        (201, None),
+    ]
     pred = F.col("vec_id") >= 200
-    fast = {
-        (r.qid, r.vid): (r.mmr_rank, r.rel, r.score)
-        for r in mmr_topk(emb, query_pred=pred, pool=10, k=4).collect()
-    }
-    slow = {
-        (r.qid, r.vid): (r.mmr_rank, r.rel, r.score)
-        for r in mmr_topk(
-            emb, query_pred=pred, pool=10, k=4, driver_finish_limit=0
-        ).collect()
-    }
-    assert fast == slow
+    for rows, pool, k in ((dense, 10, 4), (with_nulls, 10, 7)):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        fast = {
+            (r.qid, r.vid): (r.mmr_rank, r.rel, r.score)
+            for r in mmr_topk(emb, query_pred=pred, pool=pool, k=k).collect()
+        }
+        slow = {
+            (r.qid, r.vid): (r.mmr_rank, r.rel, r.score)
+            for r in mmr_topk(
+                emb, query_pred=pred, pool=pool, k=k, driver_finish_limit=0
+            ).collect()
+        }
+        assert fast == slow

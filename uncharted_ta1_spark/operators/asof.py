@@ -138,19 +138,16 @@ def asof_join(
             *[F.col(c).alias(c) for c in payload_cols],
         ).alias("_st"),
         *[F.col(c).alias(f"_tb_{c}") for c in tiebreak_cols],
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"_p_{c}") for c in probe_cols],
     )
-    st_type = state_side.schema["_st"].dataType
     probe_side = probes.select(
         *[F.col(k) for k in keys],
         F.col(probe_ts).cast("long").alias("_ts"),
         F.lit(1).alias("_side"),
-        F.lit(None).cast(st_type).alias("_st"),
-        *[F.lit(None).cast(state.schema[c].dataType).alias(f"_tb_{c}") for c in tiebreak_cols],
         *[F.col(c).alias(f"_p_{c}") for c in probe_cols],
     )
-
-    unioned = state_side.unionByName(probe_side)
+    # each side's missing columns (_p_* on state rows; _st, _tb_* on probe
+    # rows) come in as typed NULLs
+    unioned = state_side.unionByName(probe_side, allowMissingColumns=True)
 
     ts_order = F.col("_ts").desc() if direction == "forward" else F.col("_ts").asc()
     order = [ts_order, F.col("_side").asc()] + [
@@ -216,17 +213,14 @@ def _asof_join_thin(
             F.col(state_ts).cast("long").alias("anchor"),
             *[F.col(c).alias(f"tb_{c}") for c in tiebreak_cols],
         ).alias("_st"),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"_p_{c}") for c in probe_cols],
     )
-    st_type = state_thin.schema["_st"].dataType
     probe_side = probes.select(
         *[F.col(k) for k in keys],
         F.col(probe_ts).cast("long").alias("_ts"),
         F.lit(1).alias("_side"),
-        F.lit(None).cast(st_type).alias("_st"),
         *[F.col(c).alias(f"_p_{c}") for c in probe_cols],
     )
-    unioned = state_thin.unionByName(probe_side)
+    unioned = state_thin.unionByName(probe_side, allowMissingColumns=True)
 
     ts_order = F.col("_ts").desc() if direction == "forward" else F.col("_ts").asc()
     order = [ts_order, F.col("_side").asc()] + [

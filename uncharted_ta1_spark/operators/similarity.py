@@ -380,24 +380,6 @@ def ivf_cells(
     return _nearest_cells(base, cents, id_col=id_col, nprobe=1)
 
 
-def ivf_query_cells(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = 1,
-    n_iters: int = 0,
-) -> DataFrame:
-    """(vid, cell) for the ``nprobe`` nearest centroids of each vector —
-    the multi-probe side of IVF search (same assignment math as
-    :func:`ivf_cells`, keeping ranks 1..nprobe instead of only 1)."""
-    base = with_norm(emb)
-    cents = _centroid_set(
-        emb, id_col=id_col, n_centroids=n_centroids, n_iters=n_iters
-    )
-    return _nearest_cells(base, cents, id_col=id_col, nprobe=nprobe)
-
-
 def ann_ivf_topk(
     emb: DataFrame,
     *,
@@ -705,7 +687,8 @@ def _mmr_driver_finish(cands: DataFrame, pairs: DataFrame, k: int) -> DataFrame:
     Exactly the distributed loop's arithmetic and tie-breaks on the same
     9-dp-rounded doubles: pick 1 maximizes ``rel`` (score = rel verbatim),
     later rounds maximize ``(rel - maxd) / 2.0 + 0.0`` with maxd over the
-    already-selected set; ties break by vid asc.  One collect of
+    already-selected set (NULL sims ignored); a NULL score sorts last and
+    ties break by vid asc.  One collect of
     |queries| x pool (+ the pool-pair sims) replaces k-1 rounds of
     join+window+checkpoint jobs — the bounded-driver-finish pattern of
     connected_components/pca (guide §5: the droplet tail is cheaper to
@@ -719,10 +702,14 @@ def _mmr_driver_finish(cands: DataFrame, pairs: DataFrame, k: int) -> DataFrame:
     for r in pairs.select("qid", "vid_a", "vid_b", "psim").collect():
         ps[r["qid"]][(r["vid_a"], r["vid_b"])] = r["psim"]
 
+    def order(score, v):
+        # the loop's window order: score desc NULLS LAST, then vid asc
+        return (score is None, 0.0 if score is None else -score, v)
+
     out = []
     for qid, relmap in rel_by_q.items():
         remaining = set(relmap)
-        v1 = min(remaining, key=lambda v: (-relmap[v], v))
+        v1 = min(remaining, key=lambda v: order(relmap[v], v))
         out.append((qid, v1, relmap[v1], relmap[v1], 1))
         sel = [v1]
         remaining.discard(v1)
@@ -732,11 +719,19 @@ def _mmr_driver_finish(cands: DataFrame, pairs: DataFrame, k: int) -> DataFrame:
                 break
             best = None
             for v in remaining:
-                maxd = max(qps[(v, s)] for s in sel)
-                score = (relmap[v] - maxd) / 2.0 + 0.0
-                key = (-score, v)
+                # SQL max ignores NULLs; NULL only when every sim is NULL
+                maxd = max(
+                    (d for d in (qps[(v, s)] for s in sel) if d is not None),
+                    default=None,
+                )
+                rel = relmap[v]
+                score = (
+                    None if rel is None or maxd is None
+                    else (rel - maxd) / 2.0 + 0.0
+                )
+                key = order(score, v)
                 if best is None or key < best[0]:
-                    best = (key, v, relmap[v], score)
+                    best = (key, v, rel, score)
             out.append((qid, best[1], best[2], best[3], j))
             sel.append(best[1])
             remaining.discard(best[1])
