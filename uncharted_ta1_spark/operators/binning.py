@@ -1,4 +1,4 @@
-"""Distributed exact equal-frequency binning (scale-safe ntile).
+"""GK range buckets: exact ranks, ntiles and prefix sums without a global sort.
 
 Reference analog: the per-class score quantization the reference applies
 when bucketing extraction confidences for its re-add / top-up heuristics
@@ -33,15 +33,65 @@ per-task work:
 Every intermediate is integer-exact, so the result hash-matches the
 single-sort ntile oracle bit for bit while the plan survives a 100x
 scale-up (max task = one bucket ~ n_class / n_buckets rows).
+
+Steps 1-3 live here once: :func:`range_buckets` (steps 1-2) and
+:func:`bucket_offset` (step 3's exclusive offset).  :func:`bucketed_rank`
+(either direction), :func:`bucketed_cumsum` and the prefix-sum and
+order-statistic plans of ``kstest``, ``qnorm``, ``feathash``,
+``evalmetrics`` and ``conformal`` all build on them.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def range_buckets(
+    df: DataFrame, *, keys: Sequence[str], col: str, n_buckets: int
+) -> DataFrame:
+    """``df`` plus ``_bkt``: the monotone GK range bucket of ``col`` within
+    its ``keys`` group (steps 1-2 above).  ``keys=()`` buckets the whole
+    frame as one group.  Every scale-safe rank, decile and prefix sum in
+    the engine starts here."""
+    keys = list(keys)
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    bounds = df.groupBy(*keys).agg(
+        F.percentile_approx(
+            F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
+        ).alias("_bnds")
+    )
+    # #boundaries <= value: equal values can never straddle a bucket edge
+    return (
+        df.join(F.broadcast(bounds), keys or None)
+        .withColumn(
+            "_bkt",
+            F.aggregate(
+                "_bnds",
+                F.lit(0),
+                lambda acc, b: acc + F.when(F.col(col) >= b, 1).otherwise(0),
+            ),
+        )
+        .drop("_bnds")
+    )
+
+
+def bucket_offset(
+    col: str, *, keys: Sequence[str], descending: bool = False
+) -> Column:
+    """Exclusive running sum of the per-bucket aggregate ``col`` over the
+    buckets before this one (step 3 above), in ``_bkt`` order or reversed.
+    Evaluate it over the droplet-sized (keys x buckets) table."""
+    bkt = F.col("_bkt").desc() if descending else F.col("_bkt")
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(bkt)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.coalesce(F.sum(col).over(w), F.lit(0))
 
 
 def ntile_equal_freq(
@@ -56,59 +106,17 @@ def ntile_equal_freq(
 ) -> DataFrame:
     """Exact per-group ntile(k) of ``col`` (ties broken by
     ``order_tiebreak``) without a per-group global sort."""
-    keys = list(keys)
-    tb = list(order_tiebreak)
-
-    # 1. per-class GK boundaries (interior quantiles only)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.groupBy(*keys).agg(
-        F.percentile_approx(
-            F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
+    ranked = bucketed_rank(
+        df,
+        keys=keys,
+        col=col,
+        order_tiebreak=order_tiebreak,
+        n_buckets=n_buckets,
+        descending=False,
+        out_rank="_rank",
+        out_n="_n_cls",
     )
-
-    # 2. monotone range bucket: #boundaries <= value (equal values can
-    #    never straddle a bucket edge)
-    bucketed = (
-        df.join(F.broadcast(bounds), keys)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc + F.when(F.col(col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-
-    # 3. bucket counts -> per-class exclusive offsets + class totals
-    #    (classes x n_buckets rows: droplet-sized at any scale)
-    counts = bucketed.groupBy(*keys, "_bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("_bn")
-    )
-    woff = (
-        Window.partitionBy(*keys)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wtot = Window.partitionBy(*keys)
-    offsets = counts.select(
-        *keys,
-        "_bkt",
-        F.coalesce(F.sum("_bn").over(woff), F.lit(0)).alias("_off"),
-        F.sum("_bn").over(wtot).alias("_n_cls"),
-    )
-
-    # 4. local rank within (class, bucket) + offset = exact global rank;
-    #    closed-form ntile assignment over exact integers
-    wloc = Window.partitionBy(*keys, "_bkt").orderBy(
-        *[F.col(c).asc() for c in [col, *tb]]
-    )
-    ranked = (
-        bucketed.join(F.broadcast(offsets), [*keys, "_bkt"])
-        .withColumn("_rank", F.row_number().over(wloc) + F.col("_off"))
-    )
+    # closed-form ntile assignment over exact integers (step 4 above)
     q = f"(_n_cls DIV {k})"
     r = f"(_n_cls % {k})"
     tile = (
@@ -117,7 +125,7 @@ def ntile_equal_freq(
         f"ELSE {r} + (_rank - {r} * ({q} + 1) + {q} - 1) DIV {q} END"
     )
     return ranked.withColumn(out_col, F.expr(tile).cast("int")).drop(
-        "_bkt", "_bn", "_off", "_n_cls", "_rank"
+        "_n_cls", "_rank"
     )
 
 
@@ -128,67 +136,44 @@ def bucketed_rank(
     col: str,
     order_tiebreak: Sequence[str],
     n_buckets: int = 100,
+    descending: bool = True,
     out_rank: str = "_rank",
     out_n: str = "_n_grp",
 ) -> DataFrame:
-    """Exact per-group DESCENDING dense rank of ``col`` (1 = largest; ties
-    broken ascending by ``order_tiebreak``) plus the group size — computed
-    with the GK-bucket + broadcast-offset pattern so NO per-group global
-    sort exists in the plan (max task ~ group_size / n_buckets).  The
-    generalization of the ``ntile_equal_freq`` / ``vocab_index`` rank
-    plan, reusable wherever a corpus-sized rank window would otherwise
-    funnel a whole group through one task.
+    """Exact per-group rank of ``col`` (1 = largest when ``descending``,
+    smallest otherwise; ties broken ascending by ``order_tiebreak``) plus
+    the group size — computed with the GK-bucket + broadcast-offset pattern
+    so NO per-group global sort exists in the plan (max task ~
+    group_size / n_buckets).  Reusable wherever a corpus-sized rank window
+    would otherwise funnel a whole group through one task.
 
     Equal ``col`` values always share a bucket (bucketing counts
     boundaries <= value), so tie-breaks are decided entirely inside one
     bucket's window and the output is bit-identical to
-    ``row_number() OVER (PARTITION BY keys ORDER BY col DESC, tb...)``.
+    ``row_number() OVER (PARTITION BY keys ORDER BY col [DESC], tb...)``.
     """
     keys = list(keys)
-    tb = list(order_tiebreak)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.groupBy(*keys).agg(
-        F.percentile_approx(
-            F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        df.join(F.broadcast(bounds), keys)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc + F.when(F.col(col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
+    bucketed = range_buckets(df, keys=keys, col=col, n_buckets=n_buckets)
     counts = bucketed.groupBy(*keys, "_bkt").agg(
         F.count(F.lit(1)).cast("long").alias("_bn")
     )
-    # DESC rank: bucket b's exclusive offset = rows in strictly HIGHER
-    # buckets; windows below run over the droplet-sized counts table
-    woff = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("_bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wtot = Window.partitionBy(*keys)
+    # a DESC rank offsets bucket b by the rows in strictly HIGHER buckets;
+    # windows below run over the droplet-sized counts table
     offsets = counts.select(
         *keys,
         "_bkt",
-        F.coalesce(F.sum("_bn").over(woff), F.lit(0)).alias("_off"),
-        F.sum("_bn").over(wtot).alias("_n_all"),
+        bucket_offset("_bn", keys=keys, descending=descending).alias("_off"),
+        F.sum("_bn").over(Window.partitionBy(*keys)).alias("_n_all"),
     )
+    order = F.col(col).desc() if descending else F.col(col).asc()
     wloc = Window.partitionBy(*keys, "_bkt").orderBy(
-        F.col(col).desc(), *[F.col(c).asc() for c in tb]
+        order, *[F.col(c).asc() for c in order_tiebreak]
     )
     return (
         bucketed.join(F.broadcast(offsets), [*keys, "_bkt"])
         .withColumn(out_rank, (F.row_number().over(wloc) + F.col("_off")).cast("long"))
         .withColumn(out_n, F.col("_n_all").cast("long"))
-        .drop("_bkt", "_bn", "_off", "_n_all")
+        .drop("_bkt", "_off", "_n_all")
     )
 
 
@@ -212,40 +197,15 @@ def bucketed_cumsum(
     inside each (group, bucket).  Bit-identical to the naive window.
     """
     keys = list(keys)
-    tb = list(order_tiebreak)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.groupBy(*keys).agg(
-        F.percentile_approx(
-            F.col(order_col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        df.join(F.broadcast(bounds), keys)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col(order_col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-    sums = bucketed.groupBy(*keys, "_bkt").agg(
-        F.sum(val_col).cast("long").alias("_bs")
-    )
-    woff = (
-        Window.partitionBy(*keys)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.select(
-        *keys, "_bkt", F.coalesce(F.sum("_bs").over(woff), F.lit(0)).alias("_off")
+    bucketed = range_buckets(df, keys=keys, col=order_col, n_buckets=n_buckets)
+    offsets = (
+        bucketed.groupBy(*keys, "_bkt")
+        .agg(F.sum(val_col).cast("long").alias("_bs"))
+        .select(*keys, "_bkt", bucket_offset("_bs", keys=keys).alias("_off"))
     )
     wloc = (
         Window.partitionBy(*keys, "_bkt")
-        .orderBy(F.col(order_col).asc(), *[F.col(c).asc() for c in tb])
+        .orderBy(F.col(order_col).asc(), *[F.col(c).asc() for c in order_tiebreak])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
@@ -254,5 +214,5 @@ def bucketed_cumsum(
             out_col,
             (F.sum(val_col).over(wloc) + F.col("_off")).cast("long"),
         )
-        .drop("_bkt", "_bs", "_off")
+        .drop("_bkt", "_off")
     )

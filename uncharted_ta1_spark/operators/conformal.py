@@ -24,7 +24,7 @@ Scale + exactness design:
   statistic and the test-side coverage comparison are INTEGER operations
   (engine-exact);
 * the calibration k-th order statistic is GK-BUCKETED (the
-  operators/binning.py template): per-group ``percentile_approx``
+  operators/binning.py primitives): per-group ``percentile_approx``
   boundaries split each group's residuals into ~100 monotone range
   buckets, cumulative bucket counts (a groups x buckets droplet table)
   locate the ONE bucket containing rank k, and ``row_number`` runs only
@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from uncharted_ta1_spark.operators.binning import bucket_offset, range_buckets
 
 
 def split_conformal_coverage(
@@ -143,42 +145,19 @@ def split_conformal_coverage(
         F.least(F.expr(k_expr), F.col("n_cal")).cast("long").alias("_k"),
         (F.expr(k_expr) > F.col("n_cal")).alias("k_capped"),
     )
-    # GK-bucketed k-th order statistic (binning.py template): locate the
+    # GK-bucketed k-th order statistic (binning.py primitives): locate the
     # one range bucket holding rank k, rank only inside it.
-    n_buckets = 100
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bnds = cal_r.groupBy("_g").agg(
-        F.percentile_approx(
-            F.col("_r"), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        cal_r.join(F.broadcast(bnds), "_g")
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col("_r") >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-    bcounts = bucketed.groupBy("_g", "_bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("_bn")
-    )
-    woff = (
-        Window.partitionBy("_g")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    bucketed = range_buckets(cal_r, keys=["_g"], col="_r", n_buckets=100)
     # droplet table: groups x <=100 buckets
-    offsets = bcounts.select(
-        "_g",
-        "_bkt",
-        F.coalesce(F.sum("_bn").over(woff), F.lit(0)).alias("_off"),
-        F.col("_bn"),
+    offsets = (
+        bucketed.groupBy("_g", "_bkt")
+        .agg(F.count(F.lit(1)).cast("long").alias("_bn"))
+        .select(
+            "_g",
+            "_bkt",
+            bucket_offset("_bn", keys=["_g"]).alias("_off"),
+            F.col("_bn"),
+        )
     )
     target = (
         offsets.join(ks, "_g")

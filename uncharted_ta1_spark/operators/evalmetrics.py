@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from uncharted_ta1_spark.operators.binning import bucket_offset, range_buckets
+
 
 GREEDY_SCHEMA = "gkey string, n_matched long"
 
@@ -235,38 +237,11 @@ def grouped_auc(
         F.count(F.lit(1)).cast("long").alias("t"),
     ).withColumn("ng", F.col("t") - F.col("p"))
 
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = s.groupBy(*groups).agg(
-        F.percentile_approx(
-            F.col(score_col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        s.join(F.broadcast(bounds), groups)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col(score_col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-    w_off = (
-        Window.partitionBy(*groups)
-        .orderBy(F.col("_bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    bucketed = range_buckets(s, keys=groups, col=score_col, n_buckets=n_buckets)
     offsets = (
         bucketed.groupBy(*groups, "_bkt")
         .agg(F.sum("ng").cast("long").alias("_bng"))
-        .select(
-            *groups,
-            "_bkt",
-            F.coalesce(F.sum("_bng").over(w_off), F.lit(0)).alias("_off"),
-        )
+        .select(*groups, "_bkt", bucket_offset("_bng", keys=groups).alias("_off"))
     )
     w_in = (
         Window.partitionBy(*groups, "_bkt")
@@ -337,30 +312,7 @@ def grouped_average_precision(
         F.count(F.lit(1)).cast("long").alias("t"),
     )
 
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = s.groupBy(*groups).agg(
-        F.percentile_approx(
-            F.col(score_col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        s.join(F.broadcast(bounds), groups)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col(score_col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-    w_off = (
-        Window.partitionBy(*groups)
-        .orderBy(F.col("_bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    bucketed = range_buckets(s, keys=groups, col=score_col, n_buckets=n_buckets)
     offsets = (
         bucketed.groupBy(*groups, "_bkt")
         .agg(
@@ -370,8 +322,8 @@ def grouped_average_precision(
         .select(
             *groups,
             "_bkt",
-            F.coalesce(F.sum("_bp").over(w_off), F.lit(0)).alias("_offp"),
-            F.coalesce(F.sum("_bt").over(w_off), F.lit(0)).alias("_offt"),
+            bucket_offset("_bp", keys=groups).alias("_offp"),
+            bucket_offset("_bt", keys=groups).alias("_offt"),
         )
     )
     w_in = (

@@ -33,9 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from uncharted_ta1_spark.functions.portable import md5_i64, words_col
+from uncharted_ta1_spark.operators.binning import bucketed_cumsum, bucketed_rank
 
 FEATHASH_SALT = "feathash"
 
@@ -89,14 +89,10 @@ def vocab_index(
     word, ties broken lexicographically — StringIndexer's contract, made
     reproducible.  Returns (word, word_id, n_occurrences).
 
-    Rank plan (scale-safe, bit-identical to the naive global sort): GK
-    boundaries over ``n_occurrences`` (mergeable sketch, no sort) split the
-    vocabulary into monotone range buckets; ``row_number`` ordered by
-    (n_occurrences DESC, word) runs per bucket; a broadcast exclusive
-    offset — the count of words in strictly higher-count buckets — lifts
-    the local rank to the exact global id.  Equal counts always share a
-    bucket, so the lexicographic tie-break is decided entirely inside one
-    bucket's window.  Max task ~ |vocab| / n_buckets instead of |vocab|.
+    Rank plan (scale-safe, bit-identical to the naive global sort):
+    :func:`~uncharted_ta1_spark.operators.binning.bucketed_rank` over
+    ``n_occurrences`` DESC with ``word`` as the tie-break, one global
+    group.  Max task ~ |vocab| / n_buckets instead of |vocab|.
     """
     counts = (
         docs.select(F.explode(words_col(F.col(text_col))).alias("word"))
@@ -105,56 +101,13 @@ def vocab_index(
         .where(F.col("n_occurrences") >= min_count)
     )
 
-    # GK boundaries over the rank key (broadcast-scalar single row)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = counts.agg(
-        F.percentile_approx(
-            F.col("n_occurrences"),
-            F.array(*[F.lit(p) for p in probs]),
-            F.lit(10_000),
-        ).alias("_bnds")
-    )
-    # monotone range bucket: #boundaries <= n_occurrences (ascending index;
-    # equal counts can never straddle an edge)
-    bucketed = (
-        counts.join(F.broadcast(bounds))
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col("n_occurrences") >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-
-    # per-bucket counts -> exclusive DESC offsets (droplet-sized table:
-    # the rank orders by n_occurrences DESC, so bucket b's offset is the
-    # number of words in strictly higher buckets)
-    bcounts = bucketed.groupBy("_bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("_bn")
-    )
-    woff = (
-        Window.orderBy(F.col("_bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bcounts.select(
-        "_bkt", F.coalesce(F.sum("_bn").over(woff), F.lit(0)).alias("_off")
-    )
-
-    wloc = Window.partitionBy("_bkt").orderBy(
-        F.col("n_occurrences").desc(), F.col("word").asc()
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), "_bkt")
-        .withColumn(
-            "word_id",
-            (F.row_number().over(wloc) + F.col("_off") - 1).cast("long"),
-        )
-        .select("word", "word_id", "n_occurrences")
-    )
+    return bucketed_rank(
+        counts,
+        keys=(),
+        col="n_occurrences",
+        order_tiebreak=["word"],
+        n_buckets=n_buckets,
+    ).select("word", (F.col("_rank") - 1).alias("word_id"), "n_occurrences")
 
 
 VOCAB_COVERAGE_PCTS = (500, 900, 990, 999)  # per-mille thresholds
@@ -182,8 +135,6 @@ def vocab_coverage(
     Returns one row per threshold: (per_mille, vocab_needed = number of
     highest-ranked words, covered_tokens, total_tokens).
     """
-    from uncharted_ta1_spark.operators.binning import bucketed_cumsum
-
     v = vocab_index(docs, text_col=text_col).withColumn("_g", F.lit(1))
     # materialize the rank-ordered cumulative-mass table once: the total
     # aggregate and the threshold scan both consume it, and it is the

@@ -13,8 +13,8 @@ KS does not).
 
 The textbook formulation — sort the union, walk the merged CDFs — is a
 single global sort.  This module computes the IDENTICAL statistic with
-bounded per-task work, generalizing :mod:`binning`'s GK-bucket + offset
-template from *ranks* to *prefix sums*:
+bounded per-task work, applying :mod:`binning`'s GK range buckets and
+exclusive offsets to *prefix sums*:
 
 1. One combinable groupBy collapses the corpus to per-distinct-value
    class counts (``c1``, ``c2``) — the only corpus-sized shuffle.
@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from uncharted_ta1_spark.operators.binning import bucket_offset, range_buckets
 
 
 def ks_two_sample(
@@ -66,26 +68,9 @@ def ks_two_sample(
         )
     )
 
-    # 2. GK range boundaries over the distinct-value domain (interior
-    #    quantiles; they only steer load balance)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = per_v.agg(
-        F.percentile_approx(
-            F.col("_v"), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        per_v.join(F.broadcast(bounds))
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc + F.when(F.col("_v") >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
+    # 2. GK range buckets over the distinct-value domain (they only steer
+    #    load balance)
+    bucketed = range_buckets(per_v, keys=(), col="_v", n_buckets=n_buckets)
 
     # 3. exclusive per-bucket offsets from bucket totals (droplet-sized:
     #    <= n_buckets rows, so the unpartitioned window is bounded by
@@ -93,11 +78,10 @@ def ks_two_sample(
     totals = bucketed.groupBy("_bkt").agg(
         F.sum("_c1").alias("_t1"), F.sum("_c2").alias("_t2")
     )
-    woff = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     offs = totals.select(
         "_bkt",
-        F.coalesce(F.sum("_t1").over(woff), F.lit(0)).alias("_o1"),
-        F.coalesce(F.sum("_t2").over(woff), F.lit(0)).alias("_o2"),
+        bucket_offset("_t1", keys=()).alias("_o1"),
+        bucket_offset("_t2", keys=()).alias("_o2"),
     )
     win = (
         Window.partitionBy("_bkt")

@@ -16,9 +16,9 @@ in its group maps to the reference's k-th order statistic with
 ``k = ceil(r * n_ref / n)`` (so r=n hits the reference max, r=1 lands in
 the bottom 1/n_ref tail, and the map is monotone).
 
-Scale shape: BOTH rank passes are the :mod:`binning` GK-bucket
-decomposition — per-bucket ``row_number`` + broadcast exclusive offsets,
-never a whole-group sort.  The join back is an integer equi join on the
+Scale shape: BOTH rank passes are :func:`binning.bucketed_rank` —
+per-bucket ``row_number`` + broadcast exclusive offsets, never a
+whole-group sort.  The join back is an integer equi join on the
 order-statistic index; the reference side has one row per (group, k),
 so the join is hash-equi and skew-free.
 """
@@ -29,60 +29,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-
-def _bucketed_ranks(
-    df: DataFrame,
-    *,
-    keys: Sequence[str],
-    col: str,
-    tiebreak: Sequence[str],
-    n_buckets: int,
-    out: str,
-) -> DataFrame:
-    """Exact global rank of ``col`` (ties broken by ``tiebreak``) within
-    each ``keys`` group, with bounded per-task work (binning.py)."""
-    keys = list(keys)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.groupBy(*keys).agg(
-        F.percentile_approx(
-            F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("_bnds")
-    )
-    bucketed = (
-        df.join(F.broadcast(bounds), keys)
-        .withColumn(
-            "_bkt",
-            F.aggregate(
-                "_bnds",
-                F.lit(0),
-                lambda acc, b: acc + F.when(F.col(col) >= b, 1).otherwise(0),
-            ),
-        )
-        .drop("_bnds")
-    )
-    counts = bucketed.groupBy(*keys, "_bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("_bn")
-    )
-    woff = (
-        Window.partitionBy(*keys)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        *keys,
-        "_bkt",
-        F.coalesce(F.sum("_bn").over(woff), F.lit(0)).alias("_off"),
-    )
-    wloc = Window.partitionBy(*keys, "_bkt").orderBy(
-        *[F.col(c).asc() for c in [col, *tiebreak]]
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), [*keys, "_bkt"])
-        .withColumn(out, (F.row_number().over(wloc) + F.col("_off")).cast("long"))
-        .drop("_bkt", "_off")
-    )
+from uncharted_ta1_spark.operators.binning import bucketed_rank
 
 
 def quantile_normalize(
@@ -99,13 +47,13 @@ def quantile_normalize(
     """Append ``out_col``: the reference group's order statistic at each
     row's empirical quantile (``k = ceil(rank * n_ref / n)``)."""
     keys = list(keys)
-    ranked = _bucketed_ranks(
-        df, keys=keys, col=col, tiebreak=tiebreak, n_buckets=n_buckets,
-        out="_r",
-    )
-    ref_ranked = _bucketed_ranks(
-        ref, keys=keys, col=col, tiebreak=ref_tiebreak, n_buckets=n_buckets,
-        out="_k",
+    ranked = bucketed_rank(
+        df, keys=keys, col=col, order_tiebreak=tiebreak, n_buckets=n_buckets,
+        descending=False, out_rank="_r",
+    ).drop("_n_grp")
+    ref_ranked = bucketed_rank(
+        ref, keys=keys, col=col, order_tiebreak=ref_tiebreak,
+        n_buckets=n_buckets, descending=False, out_rank="_k",
     ).select(*keys, "_k", F.col(col).alias(out_col))
 
     sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("_n"))

@@ -356,30 +356,6 @@ def _centroid_iterates(
     return iterates
 
 
-def ivf_cells(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    n_centroids: int = N_CENTROIDS,
-    n_iters: int = 0,
-) -> DataFrame:
-    """(vid, cell) — IVF coarse quantization: every vector assigned to its
-    nearest (max-cosine) centroid.
-
-    ``n_iters=0`` uses the deterministic seed vectors; ``n_iters>0`` trains
-    the coarse quantizer with that many Lloyd iterations (see
-    :func:`_centroid_set`) — the knob a 100 TB ANN deployment tunes, with
-    ``ann_recall_ivf`` as the measurement harness.  Assignment is a
-    broadcast of the tiny centroid set against the corpus (one narrow pass,
-    |C| x n_centroids dot products) with a deterministic argmax.
-    """
-    base = with_norm(emb)
-    cents = _centroid_set(
-        emb, id_col=id_col, n_centroids=n_centroids, n_iters=n_iters
-    )
-    return _nearest_cells(base, cents, id_col=id_col, nprobe=1)
-
-
 def ann_ivf_topk(
     emb: DataFrame,
     *,
