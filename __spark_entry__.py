@@ -1,10 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Each ``queries()`` entry is an operator of the engine (SURVEY.md §2) run
-against the driver parquet at ``sf_dir``; ``oracle_sql()`` holds the
-equivalent DuckDB SQL.  The engine-specific ``sequences``/``probes`` tables
-are derived deterministically from the driver tables in BOTH dialects (see
-uncharted_ta1_spark/datagen.py) so the oracle checks the full path.
+Each module-level ``q_<name>`` function is an operator of the engine
+(SURVEY.md §2) run against the driver parquet at ``sf_dir``; the module-level
+string ``ORACLE_<NAME>`` holds the equivalent DuckDB SQL.  ``queries()`` and
+``oracle_sql()`` collect both by that naming rule.  The engine-specific
+``sequences``/``probes`` tables are derived deterministically from the driver
+tables in BOTH dialects (see uncharted_ta1_spark/datagen.py) so the oracle
+checks the full path.
 """
 
 from __future__ import annotations
@@ -101,7 +103,13 @@ from uncharted_ta1_spark.operators.filters import (
     mad_outlier_flag,
 )
 from uncharted_ta1_spark.features import SESSION_GAP_SEC, feature_backfill
-from uncharted_ta1_spark.operators.affinefit import affine_fit, affine_residuals, cramer_sql
+from uncharted_ta1_spark.operators.affinefit import (
+    OUTLIER_SQL,
+    affine_fit,
+    affine_residuals,
+    cramer_sql,
+    residual_sql,
+)
 from uncharted_ta1_spark.operators import georef
 from uncharted_ta1_spark.operators.intervals import interval_union, rect_union
 from uncharted_ta1_spark.operators.sessionize import session_aggs, sessionize, top_sessions
@@ -144,6 +152,7 @@ from uncharted_ta1_spark.operators.tiles import merge_tiles, tile_tokens
 from uncharted_ta1_spark.operators.curation import curate_corpus
 from uncharted_ta1_spark.operators.textscrub import scrub_pii, url_domain_stats
 from uncharted_ta1_spark.operators.textstats import (
+    KN_P_EXPR,
     bigram_logprob,
     consecutive_run_flags,
     doc_fingerprint,
@@ -156,6 +165,14 @@ from uncharted_ta1_spark.operators.textstats import (
     word_entropy,
 )
 from uncharted_ta1_spark.operators.skipgram import skipgram_pairs
+from uncharted_ta1_spark.operators.bleu import bleu_oracle_select
+from uncharted_ta1_spark.operators.bpe import bpe_encode_sql, bpe_merges_sql
+from uncharted_ta1_spark.operators.ebayes import eb_oracle_select
+from uncharted_ta1_spark.operators.editdist import wer_oracle_select
+from uncharted_ta1_spark.operators.graphrank import chain_sql
+from uncharted_ta1_spark.operators.moments import moments_oracle_select
+from uncharted_ta1_spark.operators.polygon import point_in_quad_sql, point_in_ring_sql
+from uncharted_ta1_spark.operators.sharding import SHARD_BUDGET
 from uncharted_ta1_spark.operators.windows import (
     dedup_latest,
     ewma,
@@ -428,7 +445,7 @@ def q_lag_lead_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LAG_LEAD = (
+ORACLE_LAG_LEAD_CONTEXT = (
     duck_with(SEQUENCES_DUCK)
     + f"""
 SELECT doc_id, source, seq_no, event_epoch, n_tok,
@@ -459,7 +476,7 @@ def q_rolling_ntok(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ROLLING = (
+ORACLE_ROLLING_NTOK = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source, seq_no, event_epoch, n_tok,
@@ -514,7 +531,7 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "ts_us", "event_type", "value", "session_id")
 
 
-ORACLE_SESSIONIZE = (
+ORACLE_SESSIONIZE_EVENTS = (
     duck_with(EVENTS_DUCK)
     + f"""
 , marked AS (
@@ -1152,6 +1169,10 @@ def q_streaming_asof_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+# serving must equal the batch as-of exactly: same oracle, verbatim
+ORACLE_STREAMING_ASOF_SERVE = ORACLE_ASOF_PER_SOURCE
+
+
 def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation through the REAL streaming engine in
     APPEND mode: per (event_type, 1-h window) counts + exact micro-unit
@@ -1398,7 +1419,7 @@ def q_dedup_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "source", "seq_no", "event_epoch", "n_tok")
 
 
-ORACLE_DEDUP_LATEST = (
+ORACLE_DEDUP_LATEST_STATE = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source, seq_no, event_epoch, n_tok
@@ -1593,7 +1614,7 @@ def q_dedup_exact_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(_documents(spark, sf_dir), prefix_words=3)
 
 
-ORACLE_DEDUP_EXACT = (
+ORACLE_DEDUP_EXACT_PREFIX = (
     duck_with(DOC_WORDS_DUCK)
     + """
 SELECT (('0x' || substr(md5(array_to_string(list_slice(words, 1, 3), ' ')), 1, 15))::BIGINT)
@@ -1634,10 +1655,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_oracle() -> str:
-    return (
-        duck_with(DOC_WORDS_DUCK, DOC_SHINGLES_DUCK)
-        + f"""
+ORACLE_CONTAINMENT_PAIRS = (
+    duck_with(DOC_WORDS_DUCK, DOC_SHINGLES_DUCK)
+    + f"""
 , pruned AS (
   SELECT doc_id, sh_hash FROM doc_shingles
   QUALIFY count(*) OVER (PARTITION BY sh_hash) <= {JACCARD_MAX_DF}
@@ -1657,10 +1677,10 @@ JOIN cnt ca ON ca.doc_id = doc1
 JOIN cnt cb ON cb.doc_id = doc2
 WHERE round(n_common / least(ca.n_sh, cb.n_sh), 9) >= 0.6
 """
-    )
+)
 
 
-ORACLE_DEDUP_JACCARD = (
+ORACLE_DEDUP_NGRAM_JACCARD = (
     duck_with(DOC_WORDS_DUCK, DOC_SHINGLES_DUCK)
     + f"""
 , pruned AS (
@@ -1981,9 +2001,9 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return skipgram_pairs(_documents(spark, sf_dir))
 
 
-# nests ORACLE_VOCAB_INDEX via .format(vx=...) at oracle_sql() build —
+# nests ORACLE_VOCAB_INDEX via .format(vx=...) into ORACLE_SKIPGRAM_PAIRS —
 # the negative-sampling slot table IS the vocab_index contract
-ORACLE_SKIPGRAM_PAIRS = (
+ORACLE_SKIPGRAM_PAIRS_TPL = (
     duck_with(DOC_WORDS_DUCK)
     + """
 , sg_voc AS ({vx}),
@@ -2561,100 +2581,6 @@ _LOO_V_POS = (
 )
 
 
-def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM change-point detection on daily event counts per type (Page
-    1954 — the drift-onset locator: the day where the cumulative
-    deviation from the overall mean peaks).  Made EXACT by scaling:
-    C'_k = D·Σ_{i<=k} x_i − k·S is the CUSUM times the constant D, so
-    peak location and magnitude ordering are pure BIGINT arithmetic —
-    no float enters until the one normalized output column.  Pre-agg to
-    the bounded (type × day) grid; the cumsum window runs over
-    droplet-sized per-type day series; argmax by (|C'| desc, day asc)."""
-    datagen.register_base_tables(spark, sf_dir)
-    ev = datagen.events_epoch_df(spark, sf_dir)
-    from pyspark.sql.window import Window as _W
-
-    grid = (
-        ev.select(
-            "event_type", F.expr("ts_us div 86400000000").cast("long").alias("day")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    tot = grid.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("d"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    w_cum = (
-        _W.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(_W.unboundedPreceding, _W.currentRow)
-    )
-    w_k = _W.partitionBy("event_type").orderBy("day")
-    cum = grid.withColumn("cx", F.sum("x").over(w_cum).cast("long")).withColumn(
-        "k", F.row_number().over(w_k).cast("long")
-    )
-    scaled = cum.join(tot, "event_type").withColumn(
-        "cprime", (F.col("d") * F.col("cx") - F.col("k") * F.col("s")).cast("long")
-    )
-    w_pick = _W.partitionBy("event_type").orderBy(
-        F.abs(F.col("cprime")).desc(), F.col("day").asc()
-    )
-    return (
-        scaled.withColumn("_rn", F.row_number().over(w_pick))
-        .where(F.col("_rn") == 1)
-        .select(
-            "event_type",
-            F.col("d").alias("n_days"),
-            F.col("day").alias("peak_day"),
-            F.col("cprime").alias("peak_cusum_scaled"),
-            F.round(
-                F.col("cprime").cast("double") / F.col("d").cast("double"), 9
-            ).alias("peak_cusum"),
-        )
-    )
-
-
-ORACLE_CUSUM = """
-WITH cu_ev AS (
-  SELECT event_type, epoch_us(ts) AS ts_us FROM events
-),
-cu_grid AS (
-  SELECT event_type, CAST(ts_us // 86400000000 AS BIGINT) AS day,
-         CAST(count(*) AS BIGINT) AS x
-  FROM cu_ev GROUP BY 1, 2
-),
-cu_tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS d,
-         CAST(sum(x) AS BIGINT) AS s
-  FROM cu_grid GROUP BY 1
-),
-cu_cum AS (
-  SELECT event_type, day,
-         CAST(sum(x) OVER (PARTITION BY event_type ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cx,
-         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day)
-              AS BIGINT) AS k
-  FROM cu_grid
-),
-cu_scaled AS (
-  SELECT c.event_type, c.day, t.d, t.s,
-         CAST(t.d * c.cx - c.k * t.s AS BIGINT) AS cprime
-  FROM cu_cum c JOIN cu_tot t USING (event_type)
-),
-cu_pick AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-             ORDER BY abs(cprime) DESC, day ASC) AS rn
-  FROM cu_scaled
-)
-SELECT event_type, d AS n_days, day AS peak_day,
-       cprime AS peak_cusum_scaled,
-       round(CAST(cprime AS DOUBLE) / CAST(d AS DOUBLE), 9) AS peak_cusum
-FROM cu_pick WHERE rn = 1
-"""
-
-
 def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise vocabulary Jaccard between sources (the cross-source
     similarity audit a mixture designer reads before setting weights):
@@ -2971,7 +2897,7 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GINI = (
+ORACLE_GINI_CONCENTRATION = (
     duck_with(SEQUENCES_DUCK)
     + """
 , gn_rank AS (
@@ -3415,6 +3341,9 @@ vc_wide AS (SELECT * FROM vc_cum CROSS JOIN vc_tot)
     )
 
 
+ORACLE_VOCAB_COVERAGE = _vocab_coverage_oracle()
+
+
 def q_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc mean log-prob under an interpolated Kneser-Ney bigram LM
     (D=0.75 absolute discount — operators/textstats.py::
@@ -3426,12 +3355,9 @@ def q_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kn_bigram_logprob(_documents(spark, sf_dir))
 
 
-def _kn_logprob_oracle() -> str:
-    from uncharted_ta1_spark.operators.textstats import KN_P_EXPR
-
-    return (
-        duck_with(DOC_WORDS_DUCK)
-        + f"""
+ORACLE_KN_LOGPROB = (
+    duck_with(DOC_WORDS_DUCK)
+    + f"""
 , knl_bgi AS (
   SELECT doc_id,
          unnest(list_transform(range(1, greatest(len(words), 1)), i -> words[i])) AS w1,
@@ -3463,7 +3389,7 @@ JOIN knl_nl USING (w2)
 CROSS JOIN knl_t
 GROUP BY doc_id
 """
-    )
+)
 
 
 def q_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3478,8 +3404,8 @@ def q_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # template: {tq} is ORACLE_TEXT_QUALITY nested verbatim (never fork the
-# quality_score derivation) — formatted in oracle_sql()
-ORACLE_IMPORTANCE_SAMPLE = """
+# quality_score derivation) — formatted into ORACLE_IMPORTANCE_SAMPLE
+ORACLE_IMPORTANCE_SAMPLE_TPL = """
 WITH iq AS ({tq})
 SELECT doc_id, quality_score
 FROM iq
@@ -3589,12 +3515,9 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_oracle() -> str:
-    from uncharted_ta1_spark.operators.bpe import bpe_merges_sql
-
-    return duck_with(SEQUENCES_DUCK, BPE_STREAM_DUCK) + bpe_merges_sql(
-        BPE_ROUNDS, merge_base=datagen.TOKEN_MOD
-    )
+ORACLE_BPE_MERGES = duck_with(SEQUENCES_DUCK, BPE_STREAM_DUCK) + bpe_merges_sql(
+    BPE_ROUNDS, merge_base=datagen.TOKEN_MOD
+)
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3615,12 +3538,9 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_encode_oracle() -> str:
-    from uncharted_ta1_spark.operators.bpe import bpe_encode_sql
-
-    return duck_with(SEQUENCES_DUCK, BPE_STREAM_DUCK) + bpe_encode_sql(
-        BPE_ROUNDS, merge_base=datagen.TOKEN_MOD
-    )
+ORACLE_BPE_ENCODE = duck_with(SEQUENCES_DUCK, BPE_STREAM_DUCK) + bpe_encode_sql(
+    BPE_ROUNDS, merge_base=datagen.TOKEN_MOD
+)
 
 
 def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3693,9 +3613,9 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# template: {jc} is ORACLE_DEDUP_JACCARD nested verbatim (never fork the
-# pair derivation) — formatted in oracle_sql()
-ORACLE_SPLIT_CONTAMINATION = (
+# template: {jc} is ORACLE_DEDUP_NGRAM_JACCARD nested verbatim (never fork
+# the pair derivation)
+ORACLE_SPLIT_CONTAMINATION_TPL = (
     """
 WITH jcp AS ({jc}),
 spl AS (SELECT doc_id, """
@@ -3712,6 +3632,9 @@ SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
        split_a <> split_b AS is_cross
 FROM lab GROUP BY 1, 2
 """
+)
+ORACLE_SPLIT_CONTAMINATION = ORACLE_SPLIT_CONTAMINATION_TPL.format(
+    jc=ORACLE_DEDUP_NGRAM_JACCARD
 )
 
 
@@ -3732,12 +3655,9 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shard_manifest_oracle() -> str:
-    from uncharted_ta1_spark.operators.sharding import SHARD_BUDGET
-
-    return (
-        duck_with(DOC_WORDS_DUCK)
-        + f"""
+ORACLE_SHARD_MANIFEST = (
+    duck_with(DOC_WORDS_DUCK)
+    + f"""
 , sh_base AS (
   SELECT doc_id, {_SPLIT_CASE_DUCK} AS split,
          CAST(len(words) AS BIGINT) AS w
@@ -3762,7 +3682,7 @@ SELECT split, shard_id, CAST(count(*) AS BIGINT) AS n_docs,
          AS manifest_hash
 FROM sh_asn GROUP BY 1, 2
 """
-    )
+)
 
 
 def q_time_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3885,7 +3805,7 @@ def q_range_window_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RANGE_WINDOW = (
+ORACLE_RANGE_WINDOW_FEATURES = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source, seq_no, event_epoch,
@@ -3941,6 +3861,8 @@ SELECT word,
 FROM c
 """
 )
+
+ORACLE_SKIPGRAM_PAIRS = ORACLE_SKIPGRAM_PAIRS_TPL.format(vx=ORACLE_VOCAB_INDEX)
 
 
 def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4176,7 +4098,7 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_EVAL = """
+ORACLE_DEDUP_EVAL_TPL = """
 WITH mh_full AS ({mh}),
 jc_full AS ({jc}),
 de AS (
@@ -4206,7 +4128,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The signal CTEs are the signal queries' own oracles, nested verbatim —
 # the fused decision is then derived from provably-identical inputs.
-ORACLE_CORPUS_CURATION = f"""
+ORACLE_CORPUS_CURATION_TPL = f"""
 WITH cur_tq AS ({{tq}}),
 cur_we AS ({{we}}),
 cur_rep AS ({{rep}}),
@@ -4248,7 +4170,7 @@ def _minhash_perm_values() -> str:
     return ", ".join(f"({i}, {a}, {b})" for i, a, b in minhash_params(16, 42))
 
 
-ORACLE_DEDUP_MINHASH = (
+ORACLE_DEDUP_MINHASH_LSH = (
     duck_with(DOC_WORDS_DUCK, DOC_SHINGLES_DUCK)
     + f"""
 , perms(perm, a, b) AS (VALUES {_minhash_perm_values()}),
@@ -4272,13 +4194,17 @@ GROUP BY 1, 2
 """
 )
 
+ORACLE_DEDUP_EVAL = ORACLE_DEDUP_EVAL_TPL.format(
+    mh=ORACLE_DEDUP_MINHASH_LSH, jc=ORACLE_DEDUP_NGRAM_JACCARD
+)
+
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit simhash signature per document."""
     return simhash16(_documents(spark, sf_dir))
 
 
-ORACLE_SIMHASH = (
+ORACLE_DEDUP_SIMHASH = (
     duck_with(DOC_WORDS_DUCK)
     + """
 , wh AS (
@@ -4358,6 +4284,14 @@ FROM d
 """
 )
 
+ORACLE_IMPORTANCE_SAMPLE = ORACLE_IMPORTANCE_SAMPLE_TPL.format(tq=ORACLE_TEXT_QUALITY)
+ORACLE_CORPUS_CURATION = ORACLE_CORPUS_CURATION_TPL.format(
+    tq=ORACLE_TEXT_QUALITY,
+    we=ORACLE_WORD_ENTROPY,
+    rep=ORACLE_DOC_REPETITION,
+    sp=ORACLE_SPAN_DEDUP,
+)
+
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language vote with deterministic tie-break."""
@@ -4407,7 +4341,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_fingerprint(_documents(spark, sf_dir), n=3, prefix_words=8)
 
 
-ORACLE_FINGERPRINT = (
+ORACLE_DOC_FINGERPRINT = (
     duck_with(DOC_WORDS_DUCK)
     + """
 , shl AS (
@@ -4511,6 +4445,9 @@ mmr_acc_{j} AS MATERIALIZED (
     )
 
 
+ORACLE_MMR_TOPK = _mmr_oracle()
+
+
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 per query vector (vec_id % 50 = 0)."""
     return cosine_topk(
@@ -4518,7 +4455,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_COSINE = """
+ORACLE_ANN_COSINE_TOPK = """
 WITH base AS (
   SELECT vec_id, embedding::DOUBLE[] AS e,
          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -4543,7 +4480,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_LSH = """
+ORACLE_ANN_LSH_TOPK = """
 WITH hp AS (
   SELECT j, i,
          (('0x' || substr(md5('hp_' || j || '_' || i), 1, 15))::BIGINT) % 2001 - 1000 AS w
@@ -4703,18 +4640,20 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_lsh_planes(n_planes: int) -> str:
-    """ORACLE_ANN_LSH with a different plane count (single substitution
+    """ORACLE_ANN_LSH_TOPK with a different plane count (single substitution
     point; n_planes=8 reproduces the original text exactly).  The assert
-    fails fast if a reformat of ORACLE_ANN_LSH would make the substitution
-    a silent no-op (a stale-plane-count oracle would only surface as a
-    confusing gate mismatch)."""
+    fails fast if a reformat of ORACLE_ANN_LSH_TOPK would make the
+    substitution a silent no-op (a stale-plane-count oracle would only
+    surface as a confusing gate mismatch)."""
     anchor = "range(8) t1(j)"
-    assert anchor in ORACLE_ANN_LSH, "ORACLE_ANN_LSH reformatted: update anchor"
-    return ORACLE_ANN_LSH.replace(anchor, f"range({n_planes}) t1(j)")
+    assert anchor in ORACLE_ANN_LSH_TOPK, (
+        "ORACLE_ANN_LSH_TOPK reformatted: update anchor"
+    )
+    return ORACLE_ANN_LSH_TOPK.replace(anchor, f"range({n_planes}) t1(j)")
 
 
 # exact/LSH CTE bodies are the ANN queries' own oracles, nested verbatim
-ORACLE_ANN_RECALL = """
+ORACLE_ANN_RECALL_TPL = """
 WITH ex_full AS ({ex}),
 ls8_full AS ({ls8}),
 ls4_full AS ({ls4}),
@@ -4736,6 +4675,11 @@ r4 AS (
 SELECT r8.qid, r8.n_hits_b8, r8.recall_b8, r4.n_hits_b4, r4.recall_b4
 FROM r8 JOIN r4 USING (qid)
 """
+ORACLE_ANN_RECALL = ORACLE_ANN_RECALL_TPL.format(
+    ex=ORACLE_ANN_COSINE_TOPK,
+    ls8=ORACLE_ANN_LSH_TOPK,
+    ls4=_oracle_ann_lsh_planes(4),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -4904,7 +4848,7 @@ def q_rmse_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rmse(datagen.events_epoch_df(spark, sf_dir), keys=["event_type"])
 
 
-ORACLE_RMSE = (
+ORACLE_RMSE_BY_TYPE = (
     duck_with(EVENTS_DUCK)
     + """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n_obs,
@@ -4962,7 +4906,7 @@ def q_rank_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RANK_USERS = (
+ORACLE_RANK_USERS_BY_TYPE = (
     duck_with(EVENTS_DUCK)
     + """
 , sums AS (
@@ -5070,7 +5014,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal_features(_documents(spark, sf_dir))
 
 
-ORACLE_MULTIMODAL = """
+ORACLE_MULTIMODAL_DECODE = """
 SELECT doc_id,
        CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
        sha256(text) AS sha256_hex,
@@ -5127,13 +5071,16 @@ GROUP BY doc_id, fmt, width, height
 """
 
 
+ORACLE_IMAGE_DECODE = _image_decode_oracle()
+
+
 def q_token_sum_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row token sum through the pandas-UDF path (Arrow batches)."""
     out = token_stats_pandas(_sequences(spark, sf_dir))
     return out.select("doc_id", "source", "seq_no", "token_sum")
 
 
-ORACLE_TOKEN_SUM = (
+ORACLE_TOKEN_SUM_PANDAS = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source, seq_no,
@@ -5155,7 +5102,7 @@ def q_tile_fanout_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_tiles(tile_tokens(_sequences(spark, sf_dir), tile_size=8, overlap=2))
 
 
-ORACLE_TILE_FANOUT = (
+ORACLE_TILE_FANOUT_MERGE = (
     duck_with(SEQUENCES_DUCK)
     + """
 , tiled AS (
@@ -5489,7 +5436,7 @@ def q_knn_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_KNN_NEAREST = (
+ORACLE_KNN_NEAREST_EVENT = (
     duck_with(EVENTS_DUCK)
     + """
 , errs AS (SELECT event_id AS err_id, user_id, ts_us AS err_ts
@@ -5631,7 +5578,7 @@ def q_context_window_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CONTEXT_K2 = (
+ORACLE_CONTEXT_WINDOW_K2 = (
     duck_with(SEQUENCES_DUCK)
     + """
 , ctx AS (
@@ -5869,7 +5816,7 @@ def q_feature_store_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FEATURE_STORE = (
+ORACLE_FEATURE_STORE_LOOKUP = (
     duck_with(SEQUENCES_DUCK, PROBES_DUCK)
     + """
 , docfeat AS (
@@ -6013,6 +5960,9 @@ GROUP BY bucket
 """
 
 
+ORACLE_BACKFILL_RESUME = _backfill_resume_oracle()
+
+
 # ---------------------------------------------------------------------------
 # Grouped model fit (J8/UDAF surface): per-(doc_id, source) least squares
 # (reference tasks/geo_referencing/georeference.py:130-144 fit-then-lookup;
@@ -6112,7 +6062,7 @@ def q_fit_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FIT_RESID = (
+ORACLE_FIT_RESIDUAL_OUTLIERS = (
     duck_with(SEQUENCES_DUCK)
     + _FIT_CTES
     + """
@@ -6146,7 +6096,7 @@ def q_ransac_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Round 1 = the SAME fit CTE template over the round-0 inlier subset; the
 # selector falls back to round-0 params when the refit is degenerate.
-ORACLE_RANSAC = (
+ORACLE_RANSAC_OUTLIERS = (
     duck_with(SEQUENCES_DUCK)
     + _FIT_CTES
     + """
@@ -6527,7 +6477,7 @@ def q_greedy_match_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # working table carries one row per still-active group with the lists of
 # already-matched ids; each step picks that group's lowest-ranked
 # non-conflicting pair ((dist, tid, pid) total order == the Spark kernel's).
-ORACLE_GREEDY_MATCH = (
+ORACLE_GREEDY_MATCH_F1 = (
     "WITH RECURSIVE "
     + EVENTS_DUCK.strip()
     + """
@@ -6686,7 +6636,7 @@ FROM lutv GROUP BY doc_id
 """
 
 
-ORACLE_PIXEL_LUT = _pixel_lut_oracle()
+ORACLE_PIXEL_LUT_STATS = _pixel_lut_oracle()
 
 
 def q_deg_per_km(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6817,7 +6767,7 @@ def q_spatial_contain_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", F.col("rect_doc"), "px", "py")
 
 
-ORACLE_SPATIAL_CONTAIN = (
+ORACLE_SPATIAL_CONTAIN_JOIN = (
     duck_with(POINTS_DUCK, RECTS_DUCK)
     + """
 SELECT p.event_id, r.rect_doc, p.px, p.py
@@ -6845,7 +6795,7 @@ def q_string_agg_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STRING_AGG = (
+ORACLE_STRING_AGG_GROUPS = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source,
@@ -6890,7 +6840,7 @@ def q_consecutive_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return consecutive_run_flags(_sequences(spark, sf_dir))
 
 
-ORACLE_CONSECUTIVE = (
+ORACLE_CONSECUTIVE_NOISE = (
     duck_with(SEQUENCES_DUCK)
     + """
 , tok AS (
@@ -7006,7 +6956,7 @@ def q_fuzzy_label_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FUZZY_LABEL = """
+ORACLE_FUZZY_LABEL_JOIN = """
 WITH noisy AS (
   SELECT event_id,
          CASE WHEN event_id % 7 = 0 THEN substr(event_type, 1, length(event_type) - 1)
@@ -7046,7 +6996,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_IVF = """
+ORACLE_ANN_IVF_TOPK = """
 WITH base AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb,
          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -7266,7 +7216,7 @@ def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # exact/IVF CTE bodies are the ANN queries' own oracles, nested verbatim
-ORACLE_ANN_RECALL_IVF = """
+ORACLE_ANN_RECALL_IVF_TPL = """
 WITH ex_full AS ({ex}),
 seed_full AS ({seed}),
 tr_full AS ({tr}),
@@ -7288,6 +7238,11 @@ rt AS (
 SELECT rs.qid, rs.n_hits_seed, rs.recall_seed, rt.n_hits_trained, rt.recall_trained
 FROM rs JOIN rt USING (qid)
 """
+ORACLE_ANN_RECALL_IVF = ORACLE_ANN_RECALL_IVF_TPL.format(
+    ex=ORACLE_ANN_COSINE_TOPK,
+    seed=ORACLE_ANN_IVF_TOPK,
+    tr=ORACLE_ANN_IVF_TRAINED,
+)
 
 
 def q_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7525,10 +7480,7 @@ def q_bleu_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bleu_dropout_eval(_sequences(spark, sf_dir))
 
 
-def _bleu_dropout_oracle() -> str:
-    from uncharted_ta1_spark.operators.bleu import bleu_oracle_select
-
-    return duck_with(SEQUENCES_DUCK) + bleu_oracle_select()
+ORACLE_BLEU_DROPOUT = duck_with(SEQUENCES_DUCK) + bleu_oracle_select()
 
 
 def q_wer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7542,10 +7494,7 @@ def q_wer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wer_eval(_sequences(spark, sf_dir))
 
 
-def _wer_eval_oracle() -> str:
-    from uncharted_ta1_spark.operators.editdist import wer_oracle_select
-
-    return duck_with(SEQUENCES_DUCK) + wer_oracle_select()
+ORACLE_WER_EVAL = duck_with(SEQUENCES_DUCK) + wer_oracle_select()
 
 
 def q_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7645,6 +7594,9 @@ FROM wp_words w JOIN wp_out o ON o.word = w.word
     )
 
 
+ORACLE_WORDPIECE_ENCODE = _wordpiece_oracle()
+
+
 def q_optimal_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact minimum-piece segmentation per distinct word against the
     SAME df-thresholded vocabulary as wordpiece_encode (operators/
@@ -7713,6 +7665,9 @@ FROM wp_words w JOIN wp_opt o ON o.word = w.word
     )
 
 
+ORACLE_OPTIMAL_SEGMENTATION = _optimal_segmentation_oracle()
+
+
 _PP_CAP = 64
 
 # shared pair-packing chain — both pack-level and census oracles extend it
@@ -7764,20 +7719,18 @@ def q_pack_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_packing_oracle() -> str:
-    return (
-        duck_with(SEQUENCES_DUCK)
-        + _PP_CHAIN.format(cap=_PP_CAP)
-        + "\nSELECT source, pair_id, n_members, tok_sum, max_w, oversize,"
-        "\n       n_packs, padding_toks FROM pp_out\n"
-    )
+ORACLE_PAIR_PACKING = (
+    duck_with(SEQUENCES_DUCK)
+    + _PP_CHAIN.format(cap=_PP_CAP)
+    + "\nSELECT source, pair_id, n_members, tok_sum, max_w, oversize,"
+    "\n       n_packs, padding_toks FROM pp_out\n"
+)
 
 
-def _pack_census_oracle() -> str:
-    return (
-        duck_with(SEQUENCES_DUCK)
-        + _PP_CHAIN.format(cap=_PP_CAP)
-        + f"""
+ORACLE_PACK_CENSUS = (
+    duck_with(SEQUENCES_DUCK)
+    + _PP_CHAIN.format(cap=_PP_CAP)
+    + f"""
 SELECT source,
        CAST(sum(n_members) AS BIGINT) AS n_seqs,
        CAST(sum(tok_sum) AS BIGINT) AS n_toks,
@@ -7788,7 +7741,7 @@ SELECT source,
              / CAST(sum(n_packs) * {_PP_CAP} AS DOUBLE), 9) AS pack_efficiency
 FROM pp_out GROUP BY source
 """
-    )
+)
 
 
 def q_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7825,6 +7778,7 @@ SELECT source, token_mass, floor_quota, remainder, rem_rank,
             AS BIGINT) AS quota
 FROM qa_rk
 """
+ORACLE_QUOTA_ALLOCATION = duck_with(SEQUENCES_DUCK) + ORACLE_QUOTA_ALLOCATION_TAIL
 
 
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7863,6 +7817,7 @@ SELECT u.source, u.t1, u.d1,
          + 0.0 AS distinct2
 FROM div_uni u LEFT JOIN div_bi b ON u.source = b.source
 """
+ORACLE_NGRAM_DIVERSITY = duck_with(SEQUENCES_DUCK) + ORACLE_NGRAM_DIVERSITY_TAIL
 
 
 def q_moment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7876,10 +7831,7 @@ def q_moment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moment_profile(_sequences(spark, sf_dir))
 
 
-def _moment_profile_oracle() -> str:
-    from uncharted_ta1_spark.operators.moments import moments_oracle_select
-
-    return duck_with(SEQUENCES_DUCK) + moments_oracle_select("sequences")
+ORACLE_MOMENT_PROFILE = duck_with(SEQUENCES_DUCK) + moments_oracle_select("sequences")
 
 
 def q_chi2_feature_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8775,6 +8727,9 @@ SELECT
     )
 
 
+ORACLE_MANIFEST_PRUNE_SCAN = _manifest_prune_oracle()
+
+
 def q_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg table-maintenance lifecycle on the oracle gate: three
     fragmenting MERGE deltas (epoch thirds, last-write-wins by (epoch,
@@ -8898,6 +8853,9 @@ SELECT 'c_expired', 3, rows_total, n_keys, content_hash, nb4, 1 FROM fp
     )
 
 
+ORACLE_TABLE_MAINTENANCE = _table_maintenance_oracle()
+
+
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution through MERGE (Iceberg add-column analog): batch 2
     ADDS a `quality_milli` column the table never had (pre-existing rows
@@ -8998,6 +8956,9 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM state
 """
     )
+
+
+ORACLE_SCHEMA_EVOLUTION = _schema_evolution_oracle()
 
 
 def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9273,6 +9234,9 @@ FROM v GROUP BY event_type
     )
 
 
+ORACLE_PIVOT_ACTIVITY = _pivot_activity_oracle()
+
+
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint detection per source over the daily sequence-count
     series: the day maximizing |S_k| where S_k = N*cum_k - k*total (the
@@ -9487,7 +9451,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(_documents(spark, sf_dir), k=3)
 
 
-ORACLE_TFIDF = (
+ORACLE_TFIDF_TOP_TERMS = (
     duck_with(DOC_WORDS_DUCK)
     + """
 , dw AS (SELECT doc_id, unnest(words) AS word FROM doc_words),
@@ -9582,7 +9546,7 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SPARSE_COSINE = """
+ORACLE_SPARSE_COSINE_PAIRS = """
 WITH spc_dw AS (
   SELECT doc_id,
          unnest(list_filter(string_split(text, ' '), w -> length(w) > 0))
@@ -9678,6 +9642,9 @@ def _kcore_oracle_sql(nd_oracle: str, k: int = 16, rounds: int = 8) -> str:
     return "WITH " + ",\n".join(parts) + ",\n" + body
 
 
+ORACLE_KCORE_MEMBERSHIP = _kcore_oracle_sql(ORACLE_SIMHASH_PAIRS)
+
+
 def q_weighted_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-k weighted sample without replacement (Efraimidis-Spirakis
     A-ES, operators/sampling.py::weighted_fixed_k_sample): top-20 documents
@@ -9699,7 +9666,7 @@ def q_weighted_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # template: {tq} is ORACLE_TEXT_QUALITY nested verbatim (same rule as the
 # importance sampler — never fork the quality_score derivation); the A-ES
 # key is ranked by its log, ln(u)/w, so no cross-engine pow
-ORACLE_WEIGHTED_FIXED_K = """
+ORACLE_WEIGHTED_FIXED_K_TPL = """
 WITH wfk_q AS ({tq}),
 wfk_s AS (
   SELECT doc_id, quality_score,
@@ -9711,6 +9678,10 @@ SELECT doc_id, quality_score, round(s, 6) AS aes_score
 FROM wfk_s
 QUALIFY row_number() OVER (ORDER BY s DESC, doc_id ASC) <= 20
 """
+ORACLE_WEIGHTED_FIXED_K = ORACLE_WEIGHTED_FIXED_K_TPL.format(
+    tq=ORACLE_TEXT_QUALITY,
+    h=md5_i64_duck('concat_ws(chr(31), CAST(doc_id AS VARCHAR))', salt="aes"),
+)
 
 
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10238,7 +10209,7 @@ def q_cms_sliding_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # same md5 buckets / additive merges as the Spark side; 4 hash legs
 # generated per salt cms0..cms3
-ORACLE_CMS_SLIDING = (
+ORACLE_CMS_SLIDING_HITTERS = (
     duck_with(EVENTS_DUCK)
     + """
 , csl_keys AS (
@@ -10648,6 +10619,9 @@ SELECT d.node AS doc_id, d.degree,
 FROM tg_deg d LEFT JOIN tg_pn p ON p.node = d.node
 WHERE d.degree >= 2
 """
+ORACLE_DEDUP_GRAPH_TRIANGLES = ORACLE_DEDUP_GRAPH_TRIANGLES_TPL.format(
+    nd=ORACLE_EMBEDDING_NEAR_DUP
+)
 
 
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10743,7 +10717,7 @@ FROM bf_doc d LEFT JOIN bf_exact x USING (doc_id)
 )
 
 
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered view->click->purchase funnel: entered-user counts
     per step plus integer time-to-convert sums (operators/funnel.py) —
     the analytics form of the reference's stage-gating (F9 guards)."""
@@ -10755,7 +10729,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # step semantics: first step-k event STRICTLY after the user's first
 # qualifying step-(k-1) event; all integer epoch-us — no floats
-ORACLE_FUNNEL = (
+ORACLE_FUNNEL_CONVERSION = (
     duck_with(EVENTS_DUCK)
     + """
 , fn_s0 AS (
@@ -10801,12 +10775,9 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textrank(spark, _documents(spark, sf_dir), rounds=3)
 
 
-def _oracle_textrank() -> str:
-    from uncharted_ta1_spark.operators.graphrank import chain_sql
-
-    return (
-        duck_with(DOC_WORDS_DUCK)
-        + """
+ORACLE_TEXTRANK = (
+    duck_with(DOC_WORDS_DUCK)
+    + """
 , tr_wedges AS (
   SELECT w1, w2, CAST(count(*) AS BIGINT) AS c
   FROM (
@@ -10823,8 +10794,8 @@ tr_nodes AS (
   )
 ),
 """
-        + chain_sql(3, "//")
-    )
+    + chain_sql(3, "//")
+)
 
 
 # ---------------------------------------------------------------------------
@@ -10985,7 +10956,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RETENTION = (
+ORACLE_RETENTION_COHORTS = (
     duck_with(EVENTS_DUCK)
     + """
 , days AS (
@@ -11030,7 +11001,7 @@ def q_ewma_ntok(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ewma(_sequences(spark, sf_dir), alpha=0.25)
 
 
-ORACLE_EWMA = (
+ORACLE_EWMA_NTOK = (
     duck_with(SEQUENCES_DUCK)
     + """
 SELECT doc_id, source,
@@ -11218,6 +11189,7 @@ FROM embeddings e
 WHERE e.vec_id NOT IN
       (SELECT vec_id FROM nd_clusters WHERE vec_id != cluster_id)
 """
+ORACLE_CORPUS_DEDUPED = ORACLE_CORPUS_DEDUPED_TPL.format(nd=ORACLE_EMBEDDING_NEAR_DUP)
 
 
 def q_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11453,23 +11425,19 @@ p2 AS (
 """
 
 
-def _affine_oracle() -> str:
-    return (
-        _affine_cte()
-        + """
+ORACLE_AFFINE_FIT = (
+    _affine_cte()
+    + """
 SELECT doc, n AS n_gcps, a_wx AS a, b_wx AS b, c_wx AS c,
        a_wy AS d, b_wy AS e, c_wy AS f, rmse_x, rmse_y, degenerate
 FROM p2
 """
-    )
+)
 
 
-def _affine_resid_oracle() -> str:
-    from uncharted_ta1_spark.operators.affinefit import OUTLIER_SQL, residual_sql
-
-    return (
-        _affine_cte()
-        + f""", r AS (
+ORACLE_AFFINE_RESIDUALS = (
+    _affine_cte()
+    + f""", r AS (
   SELECT g.doc, g.px, g.py, g.event_id, g.wx, g.wy,
          a_wx, rmse_x, rmse_y,
          {residual_sql("wx")} AS resid_x,
@@ -11480,7 +11448,7 @@ SELECT doc, px, py, event_id, wx, wy, resid_x, resid_y,
        {OUTLIER_SQL} AS is_outlier
 FROM r
 """
-    )
+)
 
 
 # ---------------------------------------------------------------------------
@@ -11575,6 +11543,9 @@ FROM ans
     )
 
 
+ORACLE_GEOREF_PROBE_ANSWERS = _georef_answers_oracle()
+
+
 def _georef_rmse_oracle() -> str:
     agg_cols = ",\n       ".join(
         f"{sql} AS {name}" for name, sql in georef.rmse_agg_sql().items()
@@ -11588,6 +11559,9 @@ SELECT doc,
 FROM pa
 GROUP BY doc
 """
+
+
+ORACLE_GEOREF_RMSE = _georef_rmse_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -11682,10 +11656,7 @@ def q_ring_contain_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("pt_id", "px", "py", "ring_id", "class_id")
 
 
-def _ring_contain_oracle() -> str:
-    from uncharted_ta1_spark.operators.polygon import point_in_ring_sql
-
-    return f"""
+ORACLE_RING_CONTAIN_JOIN = f"""
 WITH rr_rings AS ({RING_QUADS_SQL}),
 rr_pts AS ({POLY_POINTS_SQL})
 SELECT p.pt_id, p.px, p.py, r.ring_id, r.class_id
@@ -11693,10 +11664,7 @@ FROM rr_pts p JOIN rr_rings r ON {point_in_ring_sql()}
 """
 
 
-def _poly_contain_oracle() -> str:
-    from uncharted_ta1_spark.operators.polygon import point_in_quad_sql
-
-    return f"""
+ORACLE_POLYGON_CONTAIN_JOIN = f"""
 WITH pq_quads AS ({POLY_QUADS_SQL}),
 pq_pts AS ({POLY_POINTS_SQL})
 SELECT p.pt_id, p.px, p.py, q.quad_id, q.class_id
@@ -11718,6 +11686,9 @@ FROM pa JOIN pb
   ON a_class = b_class AND a_quad_id < b_quad_id
  AND {quad_overlap_sql("a", "b")}
 """
+
+
+ORACLE_POLYGON_OVERLAP_PAIRS = _poly_overlap_oracle()
 
 
 def q_scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11913,15 +11884,12 @@ def q_eb_smoothed_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _eb_smoothed_rate_oracle() -> str:
-    from uncharted_ta1_spark.operators.ebayes import eb_oracle_select
-
-    return (
-        "WITH eb_src AS (SELECT user_id, event_type FROM events)"
-        + eb_oracle_select(
-            src_cte="eb_src", key="user_id", hit_sql="event_type = 'click'"
-        )
+ORACLE_EB_SMOOTHED_RATE = (
+    "WITH eb_src AS (SELECT user_id, event_type FROM events)"
+    + eb_oracle_select(
+        src_cte="eb_src", key="user_id", hit_sql="event_type = 'click'"
     )
+)
 
 
 def q_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12058,6 +12026,9 @@ SELECT b.grp AS source, b.n_rows, b.mean_value, c.n_replicates, c.ci_lo, c.ci_hi
 FROM bci_base b JOIN bci_ci c ON c.grp = b.grp
 """
     )
+
+
+ORACLE_BOOTSTRAP_CI = _bootstrap_ci_oracle()
 
 
 def q_calendar_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12228,6 +12199,9 @@ FROM sequences
 WINDOW w AS (PARTITION BY doc_id, source ORDER BY event_epoch, seq_no)
 """
     )
+
+
+ORACLE_LAG_HORIZONS = _lag_horizons_oracle()
 
 
 def q_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12514,6 +12488,9 @@ UNION ALL
     )
 
 
+ORACLE_ZORDER_PRUNE = _zorder_prune_oracle()
+
+
 def q_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-TRAIN-document contamination fraction: the share of each train
     doc's distinct 3-gram shingles that appear ANYWHERE in the held-out
@@ -12613,12 +12590,7 @@ def q_backfill_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def _backfill_lineage_oracle() -> str:
-    from uncharted_ta1_spark.functions.portable import md5_i64_duck
-
-    # nests the feature-backfill oracle verbatim (composite-oracle rule);
-    # md5_i64 is non-negative, so plain % 8 matches Spark's pmod
-    return f"""
+ORACLE_BACKFILL_LINEAGE = f"""
 WITH fb AS ({ORACLE_FEATURE_BACKFILL})
 SELECT CAST({md5_i64_duck("doc_id")} % 8 AS INT) AS bucket,
        CAST(count(*) AS BIGINT) AS rows_written,
@@ -12710,6 +12682,9 @@ FROM documents
 """
 
 
+ORACLE_JSON_QUARANTINE = _json_quarantine_oracle()
+
+
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7/S8 on the oracle gate (previously pytest-only): push the probe
     spine through the engine's schema-pinned CSV sink and source
@@ -12760,6 +12735,9 @@ SELECT CAST(count(*) AS BIGINT) AS n_probes,
 FROM probes
 """
     )
+
+
+ORACLE_CSV_ROUNDTRIP = _csv_roundtrip_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -13917,534 +13895,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "asof_per_source": q_asof_per_source,
-        "asof_any_source": q_asof_any_source,
-        "asof_forward": q_asof_forward,
-        "asof_tolerance": q_asof_tolerance,
-        "lag_lead_context": q_lag_lead_context,
-        "rolling_ntok": q_rolling_ntok,
-        "rolling_median": q_rolling_median,
-        "sessionize_events": q_sessionize_events,
-        "session_aggs": q_session_aggs,
-        "streaming_sessions": q_streaming_sessions,
-        "streaming_dedup": q_streaming_dedup,
-        "streaming_attribution": q_streaming_attribution,
-        "streaming_counters": q_streaming_counters,
-        "streaming_windowed": q_streaming_windowed,
-        "streaming_left_outer": q_streaming_left_outer,
-        "streaming_asof_serve": q_streaming_asof_serve,
-        "skew_salted_join": q_skew_salted_join,
-        "session_top2": q_session_top2,
-        "expanding_mean": q_expanding_mean,
-        "group_zscore": q_group_zscore,
-        "fixed_k_sample": q_fixed_k_sample,
-        "interval_union": q_interval_union,
-        "rect_union": q_rect_union,
-        "affine_fit": q_affine_fit,
-        "affine_residuals": q_affine_residuals,
-        "georef_probe_answers": q_georef_probe_answers,
-        "georef_rmse": q_georef_rmse,
-        "polygon_contain_join": q_polygon_contain_join,
-        "polygon_overlap_pairs": q_polygon_overlap_pairs,
-        "ring_contain_join": q_ring_contain_join,
-        "dedup_latest_state": q_dedup_latest_state,
-        "group_count_filter": q_group_count_filter,
-        "adaptive_topup": q_adaptive_topup,
-        "extrapolate": q_extrapolate,
-        "mad_outlier": q_mad_outlier,
-        "dedup_exact_prefix": q_dedup_exact_prefix,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "simhash_pairs": q_simhash_pairs,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "token_counts": q_token_counts,
-        "doc_fingerprint": q_doc_fingerprint,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "random_projection": q_random_projection,
-        "embedding_covariance": q_embedding_covariance,
-        "pca_projection": q_pca_projection,
-        "ann_recall": q_ann_recall,
-        "dedup_eval": q_dedup_eval,
-        "vocab_stats": q_vocab_stats,
-        "dataset_split": q_dataset_split,
-        "bpe_merges": q_bpe_merges,
-        "bpe_encode": q_bpe_encode,
-        "pricing_summary": q_pricing_summary,
-        "forecast_revenue": q_forecast_revenue,
-        "revenue_by_nation": q_revenue_by_nation,
-        "interval_join": q_interval_join,
-        "confidence_product": q_confidence_product,
-        "rmse_by_type": q_rmse_by_type,
-        "minmax_abs": q_minmax_abs,
-        "first_last_trend": q_first_last_trend,
-        "rank_users_by_type": q_rank_users_by_type,
-        "multimodal_decode": q_multimodal_decode,
-        "blob_cache_serve": q_blob_cache_serve,
-        "image_decode": q_image_decode,
-        "token_sum_pandas": q_token_sum_pandas,
-        "feature_backfill": q_feature_backfill,
-        "feature_store_lookup": q_feature_store_lookup,
-        "bucketed_features": q_bucketed_features,
-        "backfill_resume": q_backfill_resume,
-        "tile_fanout_merge": q_tile_fanout_merge,
-        "halt_gate": q_halt_gate,
-        "pos_join": q_pos_join,
-        "except_leftover": q_except_leftover,
-        "eval_f1": q_eval_f1,
-        "ranking_auc": q_ranking_auc,
-        "scalar_extract": q_scalar_extract,
-        "knn_nearest_event": q_knn_nearest_event,
-        "distinct_gate": q_distinct_gate,
-        "salted_doc_stats": q_salted_doc_stats,
-        "context_window_k2": q_context_window_k2,
-        "embedding_near_dup": q_embedding_near_dup,
-        "group_fit": q_group_fit,
-        "fit_residual_outliers": q_fit_residual_outliers,
-        "ransac_outliers": q_ransac_outliers,
-        "deg_per_km": q_deg_per_km,
-        "geodesic_rmse": q_geodesic_rmse,
-        "sweep_argmax": q_sweep_argmax,
-        "anchor_synthesis": q_anchor_synthesis,
-        "utm_convert": q_utm_convert,
-        "utm_roundtrip": q_utm_roundtrip,
-        "pixel_lut_stats": q_pixel_lut_stats,
-        "pack_chunks": q_pack_chunks,
-        "stratified_sample": q_stratified_sample,
-        "datum_shift": q_datum_shift,
-        "greedy_match_f1": q_greedy_match_f1,
-        "ann_ivf_nprobe2": q_ann_ivf_nprobe2,
-        "ann_ivf_trained": q_ann_ivf_trained,
-        "ann_ivf_convergence": q_ann_ivf_convergence,
-        "ann_recall_ivf": q_ann_recall_ivf,
-        "doc_repetition": q_doc_repetition,
-        "decontaminate": q_decontaminate,
-        "span_dedup": q_span_dedup,
-        "span_dedup_sliding": q_span_dedup_sliding,
-        "span_dedup_exact": q_span_dedup_exact,
-        "span_scrub": q_span_scrub,
-        "word_entropy": q_word_entropy,
-        "corpus_curation": q_corpus_curation,
-        "bigram_logprob": q_bigram_logprob,
-        "dsir_weights": q_dsir_weights,
-        "kn_logprob": q_kn_logprob,
-        "bootstrap_ci": q_bootstrap_ci,
-        "vocab_coverage": q_vocab_coverage,
-        "golden_records": q_golden_records,
-        "nb_confusion": q_nb_confusion,
-        "split_balance": q_split_balance,
-        "trimmed_mean": q_trimmed_mean,
-        "hourly_anomalies": q_hourly_anomalies,
-        "fightin_words": q_fightin_words,
-        "gini_concentration": q_gini_concentration,
-        "heaps_fit": q_heaps_fit,
-        "word_burstiness": q_word_burstiness,
-        "source_vocab_overlap": q_source_vocab_overlap,
-        "cusum_changepoint": q_cusum_changepoint,
-        "importance_sample": q_importance_sample,
-        "weighted_fixed_k": q_weighted_fixed_k,
-        "kcore_membership": q_kcore_membership,
-        "sparse_cosine_pairs": q_sparse_cosine_pairs,
-        "pii_redact": q_pii_redact,
-        "url_domains": q_url_domains,
-        "spatial_contain_join": q_spatial_contain_join,
-        "string_agg_groups": q_string_agg_groups,
-        "line_blocks": q_line_blocks,
-        "consecutive_noise": q_consecutive_noise,
-        "json_serialize": q_json_serialize,
-        "fuzzy_label_join": q_fuzzy_label_join,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ntok_quantiles": q_ntok_quantiles,
-        "hash_sample": q_hash_sample,
-        "token_bigrams": q_token_bigrams,
-        "pmi_collocations": q_pmi_collocations,
-        "skipgram_pairs": q_skipgram_pairs,
-        "frequency_spectrum": q_frequency_spectrum,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "keyword_logodds": q_keyword_logodds,
-        "kn_continuation": q_kn_continuation,
-        "mi_feature_select": q_mi_feature_select,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "bm25_search": q_bm25_search,
-        "hll_distinct": q_hll_distinct,
-        "hll_sliding_distinct": q_hll_sliding_distinct,
-        "hybrid_rrf": q_hybrid_rrf,
-        "scd2_pit_lookup": q_scd2_pit_lookup,
-        "bitemporal_asof": q_bitemporal_asof,
-        "calendar_features": q_calendar_features,
-        "rolling_slope": q_rolling_slope,
-        "eb_smoothed_rate": q_eb_smoothed_rate,
-        "dq_report": q_dq_report,
-        "mmr_topk": q_mmr_topk,
-        "split_contamination": q_split_contamination,
-        "shard_manifest": q_shard_manifest,
-        "ndcg_eval": q_ndcg_eval,
-        "dedup_graph_triangles": q_dedup_graph_triangles,
-        "grouped_mode": q_grouped_mode,
-        "cms_sliding_hitters": q_cms_sliding_hitters,
-        "kmv_set_overlap": q_kmv_set_overlap,
-        "shingle_novelty": q_shingle_novelty,
-        "embedding_quantize": q_embedding_quantize,
-        "benford_audit": q_benford_audit,
-        "isotonic_calibration": q_isotonic_calibration,
-        "conformal_coverage": q_conformal_coverage,
-        "woe_encoding": q_woe_encoding,
-        "km_survival": q_km_survival,
-        "decile_lift": q_decile_lift,
-        "cohen_kappa": q_cohen_kappa,
-        "markov_transitions": q_markov_transitions,
-        "ks_statistic": q_ks_statistic,
-        "average_precision": q_average_precision,
-        "fs_linkage": q_fs_linkage,
-        "quantile_normalize": q_quantile_normalize,
-        "oov_rate": q_oov_rate,
-        "hard_negatives": q_hard_negatives,
-        "token_jsd": q_token_jsd,
-        "zipf_slope": q_zipf_slope,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "textrank": q_textrank,
-        "funnel_conversion": q_funnel,
-        "shipping_priority": q_shipping_priority,
-        "order_priority": q_order_priority,
-        "big_orders": q_big_orders,
-        "time_cv_folds": q_time_cv_folds,
-        "psi_drift": q_psi_drift,
-        "range_window_features": q_range_window_features,
-        "hashed_features": q_hashed_features,
-        "vocab_index": q_vocab_index,
-        "type_rollup": q_type_rollup,
-        "running_distinct": q_running_distinct,
-        "data_profile": q_data_profile,
-        "robust_scale": q_robust_scale,
-        "sliding_windows": q_sliding_windows,
-        "incremental_rollup": q_incremental_rollup,
-        "fit_transform_scale": q_fit_transform_scale,
-        "class_balance": q_class_balance,
-        "chi2_feature_select": q_chi2_feature_select,
-        "mask_tokens": q_mask_tokens,
-        "span_corruption": q_span_corruption,
-        "temperature_mix": q_temperature_mix,
-        "moment_profile": q_moment_profile,
-        "bleu_dropout": q_bleu_dropout,
-        "wer_eval": q_wer_eval,
-        "containment_pairs": q_containment_pairs,
-        "cube_profile": q_cube_profile,
-        "ngram_diversity": q_ngram_diversity,
-        "quota_allocation": q_quota_allocation,
-        "wordpiece_encode": q_wordpiece_encode,
-        "optimal_segmentation": q_optimal_segmentation,
-        "pair_packing": q_pair_packing,
-        "pack_census": q_pack_census,
-        "merge_timetravel": q_merge_timetravel,
-        "snapshot_diff": q_snapshot_diff,
-        "merge_delete": q_merge_delete,
-        "scd2_versions": q_scd2_versions,
-        "twap_features": q_twap_features,
-        "lag_horizons": q_lag_horizons,
-        "resample_locf": q_resample_locf,
-        "oof_target_encode": q_oof_target_encode,
-        "zorder_prune": q_zorder_prune,
-        "contamination_overlap": q_contamination_overlap,
-        "backfill_lineage": q_backfill_lineage,
-        "json_quarantine": q_json_quarantine,
-        "csv_roundtrip": q_csv_roundtrip,
-        "manifest_prune_scan": q_manifest_prune_scan,
-        "table_maintenance": q_table_maintenance,
-        "schema_evolution": q_schema_evolution,
-        "asof_nearest": q_asof_nearest,
-        "leakage_audit": q_leakage_audit,
-        "target_encode": q_target_encode,
-        "pivot_activity": q_pivot_activity,
-        "cusum_changepoint": q_cusum_changepoint,
-        "retention_cohorts": q_retention_cohorts,
-        "frame_sample": q_frame_sample,
-        "ewma_ntok": q_ewma_ntok,
-        "dedup_clusters": q_dedup_clusters,
-        "corpus_deduped": q_corpus_deduped,
-        "hourly_rollup": q_hourly_rollup,
-        "value_deciles": q_value_deciles,
-        "calibration_curve": q_calibration_curve,
-    }
+    """Every module-level ``q_<name>`` function, keyed by ``<name>``."""
+    return {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
+
+
+# pca_projection: rows-only by design (driver-side LAPACK eigen has no SQL
+# twin; the exact Gram it is fit from IS hashed by embedding_covariance)
+_ROWS_ONLY = frozenset({"pca_projection"})
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "asof_per_source": ORACLE_ASOF_PER_SOURCE,
-        "asof_any_source": ORACLE_ASOF_ANY_SOURCE,
-        "asof_forward": ORACLE_ASOF_FORWARD,
-        "asof_tolerance": ORACLE_ASOF_TOLERANCE,
-        "lag_lead_context": ORACLE_LAG_LEAD,
-        "rolling_ntok": ORACLE_ROLLING,
-        "rolling_median": ORACLE_ROLLING_MEDIAN,
-        "sessionize_events": ORACLE_SESSIONIZE,
-        "session_aggs": ORACLE_SESSION_AGGS,
-        "streaming_sessions": ORACLE_STREAMING_SESSIONS,
-        "streaming_dedup": ORACLE_STREAMING_DEDUP,
-        "streaming_attribution": ORACLE_STREAMING_ATTRIBUTION,
-        "streaming_counters": ORACLE_STREAMING_COUNTERS,
-        "streaming_windowed": ORACLE_STREAMING_WINDOWED,
-        "streaming_left_outer": ORACLE_STREAMING_LEFT_OUTER,
-        # serving must equal the batch as-of exactly: same oracle, verbatim
-        "streaming_asof_serve": ORACLE_ASOF_PER_SOURCE,
-        "skew_salted_join": ORACLE_SKEW_SALTED_JOIN,
-        "session_top2": ORACLE_SESSION_TOP2,
-        "expanding_mean": ORACLE_EXPANDING_MEAN,
-        "group_zscore": ORACLE_GROUP_ZSCORE,
-        "fixed_k_sample": ORACLE_FIXED_K_SAMPLE,
-        "interval_union": ORACLE_INTERVAL_UNION,
-        "rect_union": ORACLE_RECT_UNION,
-        "affine_fit": _affine_oracle(),
-        "affine_residuals": _affine_resid_oracle(),
-        "georef_probe_answers": _georef_answers_oracle(),
-        "georef_rmse": _georef_rmse_oracle(),
-        "polygon_contain_join": _poly_contain_oracle(),
-        "polygon_overlap_pairs": _poly_overlap_oracle(),
-        "ring_contain_join": _ring_contain_oracle(),
-        "dedup_latest_state": ORACLE_DEDUP_LATEST,
-        "group_count_filter": ORACLE_GROUP_COUNT_FILTER,
-        "adaptive_topup": ORACLE_ADAPTIVE_TOPUP,
-        "extrapolate": ORACLE_EXTRAPOLATE,
-        "mad_outlier": ORACLE_MAD_OUTLIER,
-        "dedup_exact_prefix": ORACLE_DEDUP_EXACT,
-        "dedup_ngram_jaccard": ORACLE_DEDUP_JACCARD,
-        "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH,
-        "dedup_simhash": ORACLE_SIMHASH,
-        "simhash_pairs": ORACLE_SIMHASH_PAIRS,
-        "text_quality": ORACLE_TEXT_QUALITY,
-        "lang_id": ORACLE_LANG_ID,
-        "token_counts": ORACLE_TOKEN_COUNTS,
-        "doc_fingerprint": ORACLE_FINGERPRINT,
-        "ann_cosine_topk": ORACLE_ANN_COSINE,
-        "ann_lsh_topk": ORACLE_ANN_LSH,
-        "random_projection": ORACLE_RANDOM_PROJECTION,
-        "embedding_covariance": ORACLE_EMBEDDING_COVARIANCE,
-        # pca_projection: rows-only by design (driver-side LAPACK eigen has
-        # no SQL twin; the exact Gram it is fit from IS hashed above)
-        "vocab_stats": ORACLE_VOCAB_STATS,
-        "dataset_split": ORACLE_DATASET_SPLIT,
-        "bpe_merges": _bpe_oracle(),
-        "bpe_encode": _bpe_encode_oracle(),
-        "dedup_eval": ORACLE_DEDUP_EVAL.format(
-            mh=ORACLE_DEDUP_MINHASH, jc=ORACLE_DEDUP_JACCARD
-        ),
-        "ann_recall": ORACLE_ANN_RECALL.format(
-            ex=ORACLE_ANN_COSINE,
-            ls8=ORACLE_ANN_LSH,
-            ls4=_oracle_ann_lsh_planes(4),
-        ),
-        "pricing_summary": ORACLE_PRICING_SUMMARY,
-        "forecast_revenue": ORACLE_FORECAST_REVENUE,
-        "revenue_by_nation": ORACLE_REVENUE_BY_NATION,
-        "interval_join": ORACLE_INTERVAL_JOIN,
-        "confidence_product": ORACLE_CONFIDENCE_PRODUCT,
-        "rmse_by_type": ORACLE_RMSE,
-        "minmax_abs": ORACLE_MINMAX_ABS,
-        "first_last_trend": ORACLE_FIRST_LAST_TREND,
-        "rank_users_by_type": ORACLE_RANK_USERS,
-        "multimodal_decode": ORACLE_MULTIMODAL,
-        "blob_cache_serve": ORACLE_BLOB_CACHE_SERVE,
-        "image_decode": _image_decode_oracle(),
-        "token_sum_pandas": ORACLE_TOKEN_SUM,
-        "feature_backfill": ORACLE_FEATURE_BACKFILL,
-        "feature_store_lookup": ORACLE_FEATURE_STORE,
-        "bucketed_features": ORACLE_BUCKETED_FEATURES,
-        "backfill_resume": _backfill_resume_oracle(),
-        "tile_fanout_merge": ORACLE_TILE_FANOUT,
-        "halt_gate": ORACLE_HALT_GATE,
-        "pos_join": ORACLE_POS_JOIN,
-        "except_leftover": ORACLE_EXCEPT_LEFTOVER,
-        "eval_f1": ORACLE_EVAL_F1,
-        "ranking_auc": ORACLE_RANKING_AUC,
-        "scalar_extract": ORACLE_SCALAR_EXTRACT,
-        "knn_nearest_event": ORACLE_KNN_NEAREST,
-        "distinct_gate": ORACLE_DISTINCT_GATE,
-        "salted_doc_stats": ORACLE_SALTED_DOC_STATS,
-        "context_window_k2": ORACLE_CONTEXT_K2,
-        "embedding_near_dup": ORACLE_EMBEDDING_NEAR_DUP,
-        "group_fit": ORACLE_GROUP_FIT,
-        "fit_residual_outliers": ORACLE_FIT_RESID,
-        "ransac_outliers": ORACLE_RANSAC,
-        "deg_per_km": ORACLE_DEG_PER_KM,
-        "geodesic_rmse": ORACLE_GEODESIC_RMSE,
-        "sweep_argmax": ORACLE_SWEEP_ARGMAX,
-        "anchor_synthesis": ORACLE_ANCHOR_SYNTHESIS,
-        "utm_convert": ORACLE_UTM_CONVERT,
-        "utm_roundtrip": ORACLE_UTM_ROUNDTRIP,
-        "pixel_lut_stats": ORACLE_PIXEL_LUT,
-        "pack_chunks": ORACLE_PACK_CHUNKS,
-        "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-        "datum_shift": ORACLE_DATUM_SHIFT,
-        "greedy_match_f1": ORACLE_GREEDY_MATCH,
-        "ann_ivf_nprobe2": ORACLE_ANN_IVF_NPROBE2,
-        "ann_ivf_trained": ORACLE_ANN_IVF_TRAINED,
-        "ann_ivf_convergence": ORACLE_ANN_IVF_CONVERGENCE,
-        "ann_recall_ivf": ORACLE_ANN_RECALL_IVF.format(
-            ex=ORACLE_ANN_COSINE,
-            seed=ORACLE_ANN_IVF,
-            tr=ORACLE_ANN_IVF_TRAINED,
-        ),
-        "doc_repetition": ORACLE_DOC_REPETITION,
-        "decontaminate": ORACLE_DECONTAMINATE,
-        "span_dedup": ORACLE_SPAN_DEDUP,
-        "span_dedup_sliding": ORACLE_SPAN_DEDUP_SLIDING,
-        "span_dedup_exact": ORACLE_SPAN_DEDUP_EXACT,
-        "span_scrub": ORACLE_SPAN_SCRUB,
-        "word_entropy": ORACLE_WORD_ENTROPY,
-        "bigram_logprob": ORACLE_BIGRAM_LOGPROB,
-        "dsir_weights": ORACLE_DSIR_WEIGHTS,
-        "kn_logprob": _kn_logprob_oracle(),
-        "bootstrap_ci": _bootstrap_ci_oracle(),
-        "vocab_coverage": _vocab_coverage_oracle(),
-        "golden_records": ORACLE_GOLDEN_RECORDS,
-        "nb_confusion": ORACLE_NB_CONFUSION,
-        "split_balance": ORACLE_SPLIT_BALANCE,
-        "trimmed_mean": ORACLE_TRIMMED_MEAN,
-        "hourly_anomalies": ORACLE_HOURLY_ANOMALIES,
-        "fightin_words": ORACLE_FIGHTIN_WORDS,
-        "gini_concentration": ORACLE_GINI,
-        "heaps_fit": ORACLE_HEAPS_FIT,
-        "word_burstiness": ORACLE_WORD_BURSTINESS,
-        "source_vocab_overlap": ORACLE_SOURCE_VOCAB_OVERLAP,
-        "cusum_changepoint": ORACLE_CUSUM,
-        "importance_sample": ORACLE_IMPORTANCE_SAMPLE.format(tq=ORACLE_TEXT_QUALITY),
-        "weighted_fixed_k": ORACLE_WEIGHTED_FIXED_K.format(
-            tq=ORACLE_TEXT_QUALITY,
-            h=md5_i64_duck(
-                'concat_ws(chr(31), CAST(doc_id AS VARCHAR))', salt="aes"
-            ),
-        ),
-        "kcore_membership": _kcore_oracle_sql(ORACLE_SIMHASH_PAIRS),
-        "sparse_cosine_pairs": ORACLE_SPARSE_COSINE,
-        "corpus_curation": ORACLE_CORPUS_CURATION.format(
-            tq=ORACLE_TEXT_QUALITY,
-            we=ORACLE_WORD_ENTROPY,
-            rep=ORACLE_DOC_REPETITION,
-            sp=ORACLE_SPAN_DEDUP,
-        ),
-        "pii_redact": ORACLE_PII_REDACT,
-        "url_domains": ORACLE_URL_DOMAINS,
-        "spatial_contain_join": ORACLE_SPATIAL_CONTAIN,
-        "string_agg_groups": ORACLE_STRING_AGG,
-        "line_blocks": ORACLE_LINE_BLOCKS,
-        "consecutive_noise": ORACLE_CONSECUTIVE,
-        "json_serialize": ORACLE_JSON_SERIALIZE,
-        "fuzzy_label_join": ORACLE_FUZZY_LABEL,
-        "ann_ivf_topk": ORACLE_ANN_IVF,
-        "ntok_quantiles": ORACLE_NTOK_QUANTILES,
-        "hash_sample": ORACLE_HASH_SAMPLE,
-        "token_bigrams": ORACLE_TOKEN_BIGRAMS,
-        "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-        "skipgram_pairs": ORACLE_SKIPGRAM_PAIRS.format(vx=ORACLE_VOCAB_INDEX),
-        "frequency_spectrum": ORACLE_FREQUENCY_SPECTRUM,
-        "winnow_fingerprints": ORACLE_WINNOW_FINGERPRINTS,
-        "keyword_logodds": ORACLE_KEYWORD_LOGODDS,
-        "kn_continuation": ORACLE_KN_CONTINUATION,
-        "mi_feature_select": ORACLE_MI_FEATURE_SELECT,
-        "tfidf_top_terms": ORACLE_TFIDF,
-        "bm25_search": ORACLE_BM25_SEARCH,
-        "hll_distinct": ORACLE_HLL_DISTINCT,
-        "hll_sliding_distinct": ORACLE_HLL_SLIDING_DISTINCT,
-        "hybrid_rrf": ORACLE_HYBRID_RRF,
-        "scd2_pit_lookup": ORACLE_SCD2_PIT_LOOKUP,
-        "bitemporal_asof": ORACLE_BITEMPORAL_ASOF,
-        "calendar_features": ORACLE_CALENDAR_FEATURES,
-        "rolling_slope": ORACLE_ROLLING_SLOPE,
-        "eb_smoothed_rate": _eb_smoothed_rate_oracle(),
-        "dq_report": ORACLE_DQ_REPORT,
-        "mmr_topk": _mmr_oracle(),
-        "split_contamination": ORACLE_SPLIT_CONTAMINATION.format(
-            jc=ORACLE_DEDUP_JACCARD
-        ),
-        "shard_manifest": _shard_manifest_oracle(),
-        "ndcg_eval": ORACLE_NDCG_EVAL,
-        "dedup_graph_triangles": ORACLE_DEDUP_GRAPH_TRIANGLES_TPL.format(nd=ORACLE_EMBEDDING_NEAR_DUP),
-        "grouped_mode": ORACLE_GROUPED_MODE,
-        "cms_sliding_hitters": ORACLE_CMS_SLIDING,
-        "kmv_set_overlap": ORACLE_KMV_SET_OVERLAP,
-        "shingle_novelty": ORACLE_SHINGLE_NOVELTY,
-        "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-        "benford_audit": ORACLE_BENFORD_AUDIT,
-        "isotonic_calibration": ORACLE_ISOTONIC_CALIBRATION,
-        "conformal_coverage": ORACLE_CONFORMAL_COVERAGE,
-        "woe_encoding": ORACLE_WOE_ENCODING,
-        "km_survival": ORACLE_KM_SURVIVAL,
-        "decile_lift": ORACLE_DECILE_LIFT,
-        "cohen_kappa": ORACLE_COHEN_KAPPA,
-        "markov_transitions": ORACLE_MARKOV_TRANSITIONS,
-        "ks_statistic": ORACLE_KS_STATISTIC,
-        "average_precision": ORACLE_AVERAGE_PRECISION,
-        "fs_linkage": ORACLE_FS_LINKAGE,
-        "quantile_normalize": ORACLE_QUANTILE_NORMALIZE,
-        "oov_rate": ORACLE_OOV_RATE,
-        "hard_negatives": ORACLE_HARD_NEGATIVES,
-        "token_jsd": ORACLE_TOKEN_JSD,
-        "zipf_slope": ORACLE_ZIPF_SLOPE,
-        "cms_heavy_hitters": ORACLE_CMS_HEAVY_HITTERS,
-        "bloom_decontaminate": ORACLE_BLOOM_DECONTAMINATE,
-        "textrank": _oracle_textrank(),
-        "funnel_conversion": ORACLE_FUNNEL,
-        "shipping_priority": ORACLE_SHIPPING_PRIORITY,
-        "order_priority": ORACLE_ORDER_PRIORITY,
-        "time_cv_folds": ORACLE_TIME_CV_FOLDS,
-        "psi_drift": ORACLE_PSI_DRIFT,
-        "range_window_features": ORACLE_RANGE_WINDOW,
-        "hashed_features": ORACLE_HASHED_FEATURES,
-        "vocab_index": ORACLE_VOCAB_INDEX,
-        "type_rollup": ORACLE_TYPE_ROLLUP,
-        "running_distinct": ORACLE_RUNNING_DISTINCT,
-        "data_profile": ORACLE_DATA_PROFILE,
-        "robust_scale": ORACLE_ROBUST_SCALE,
-        "sliding_windows": ORACLE_SLIDING_WINDOWS,
-        "incremental_rollup": ORACLE_INCREMENTAL_ROLLUP,
-        "fit_transform_scale": ORACLE_FIT_TRANSFORM_SCALE,
-        "class_balance": ORACLE_CLASS_BALANCE,
-        "chi2_feature_select": ORACLE_CHI2_FEATURE_SELECT,
-        "mask_tokens": ORACLE_MASK_TOKENS,
-        "span_corruption": ORACLE_SPAN_CORRUPTION,
-        "temperature_mix": ORACLE_TEMPERATURE_MIX,
-        "moment_profile": _moment_profile_oracle(),
-        "bleu_dropout": _bleu_dropout_oracle(),
-        "wer_eval": _wer_eval_oracle(),
-        "containment_pairs": _containment_oracle(),
-        "cube_profile": ORACLE_CUBE_PROFILE,
-        "ngram_diversity": duck_with(SEQUENCES_DUCK) + ORACLE_NGRAM_DIVERSITY_TAIL,
-        "quota_allocation": duck_with(SEQUENCES_DUCK) + ORACLE_QUOTA_ALLOCATION_TAIL,
-        "wordpiece_encode": _wordpiece_oracle(),
-        "optimal_segmentation": _optimal_segmentation_oracle(),
-        "pair_packing": _pair_packing_oracle(),
-        "pack_census": _pack_census_oracle(),
-        "merge_timetravel": ORACLE_MERGE_TIMETRAVEL,
-        "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-        "merge_delete": ORACLE_MERGE_DELETE,
-        "scd2_versions": ORACLE_SCD2_VERSIONS,
-        "twap_features": ORACLE_TWAP_FEATURES,
-        "lag_horizons": _lag_horizons_oracle(),
-        "resample_locf": ORACLE_RESAMPLE_LOCF,
-        "oof_target_encode": ORACLE_OOF_TARGET_ENCODE,
-        "zorder_prune": _zorder_prune_oracle(),
-        "contamination_overlap": ORACLE_CONTAMINATION_OVERLAP,
-        "backfill_lineage": _backfill_lineage_oracle(),
-        "json_quarantine": _json_quarantine_oracle(),
-        "csv_roundtrip": _csv_roundtrip_oracle(),
-        "manifest_prune_scan": _manifest_prune_oracle(),
-        "table_maintenance": _table_maintenance_oracle(),
-        "schema_evolution": _schema_evolution_oracle(),
-        "asof_nearest": ORACLE_ASOF_NEAREST,
-        "leakage_audit": ORACLE_LEAKAGE_AUDIT,
-        "target_encode": ORACLE_TARGET_ENCODE,
-        "pivot_activity": _pivot_activity_oracle(),
-        "cusum_changepoint": ORACLE_CUSUM_CHANGEPOINT,
-        "big_orders": ORACLE_BIG_ORDERS,
-        "retention_cohorts": ORACLE_RETENTION,
-        "frame_sample": ORACLE_FRAME_SAMPLE,
-        "ewma_ntok": ORACLE_EWMA,
-        "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-        "corpus_deduped": ORACLE_CORPUS_DEDUPED_TPL.format(nd=ORACLE_EMBEDDING_NEAR_DUP),
-        "hourly_rollup": ORACLE_HOURLY_ROLLUP,
-        "value_deciles": ORACLE_VALUE_DECILES,
-        "calibration_curve": ORACLE_CALIBRATION_CURVE,
-    }
+    """``ORACLE_<NAME>`` for every query ``<name>`` except the rows-only ones."""
+    g = globals()
+    return {n: g[f"ORACLE_{n.upper()}"] for n in queries() if n not in _ROWS_ONLY}

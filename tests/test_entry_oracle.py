@@ -3,6 +3,9 @@ replicated locally at sf0.001 (fast) for all queries."""
 
 from __future__ import annotations
 
+import ast
+from collections import Counter
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -16,6 +19,24 @@ def test_every_query_has_callable_shape(spark):
     assert QUERIES, "queries() must not be empty"
     for name in ORACLES:
         assert name in QUERIES, f"oracle {name} has no query"
+    # a forgotten oracle would otherwise pass as a rows-only query
+    assert set(QUERIES) - set(ORACLES) == {"pca_projection"}
+
+
+def test_entry_module_binds_each_name_once():
+    """A second top-level ``def q_x`` or ``ORACLE_X = ...`` silently
+    shadows the first, so the first never runs and no test notices."""
+    with open(entrymod.__file__) as f:
+        tree = ast.parse(f.read())
+    names = []
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            names.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names += [t.id for t in targets if isinstance(t, ast.Name)]
+    dups = sorted(n for n, c in Counter(names).items() if c > 1)
+    assert not dups, f"bound twice at module level: {dups}"
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

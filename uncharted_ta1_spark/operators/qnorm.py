@@ -49,20 +49,18 @@ def quantile_normalize(
     keys = list(keys)
     ranked = bucketed_rank(
         df, keys=keys, col=col, order_tiebreak=tiebreak, n_buckets=n_buckets,
-        descending=False, out_rank="_r",
-    ).drop("_n_grp")
+        descending=False, out_rank="_r", out_n="_n",
+    )
     ref_ranked = bucketed_rank(
         ref, keys=keys, col=col, order_tiebreak=ref_tiebreak,
         n_buckets=n_buckets, descending=False, out_rank="_k",
     ).select(*keys, "_k", F.col(col).alias(out_col))
 
-    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("_n"))
     ref_sizes = ref.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("_nref")
     )
     with_k = (
-        ranked.join(F.broadcast(sizes), keys)
-        .join(F.broadcast(ref_sizes), keys)
+        ranked.join(F.broadcast(ref_sizes), keys)
         # ceil(r * nref / n) in EXACT integer math — never a double
         # division (r*nref can exceed double's 2^53 integer range):
         # (a + n - 1) DIV n == ceil(a / n) for positive a, n

@@ -11,6 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """16g, capped at half the host's physical memory.  A heap near the
+    host's RAM never pushes the GC before the machine runs out: an sf0.01
+    driver_sim JVM reached 9.3 GB RSS on a 15.7 GiB host, and the JVMs
+    beside it died."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 # Defaults chosen for the 100TB design point, scaled to local mode:
 #  * AQE on: runtime partition coalescing + skew-join splitting replaces
 #    hand-tuned shuffle partition counts at every scale.
@@ -53,7 +63,9 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()
+    ),
     # the sf0.5 stress sweep collects multi-GB results through driver_sim's
     # compare harness (spatial_contain_join fans out 36.5M rows under the
     # tier's 5x copies); the 1g default kills the collect, not the job
