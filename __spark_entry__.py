@@ -266,16 +266,10 @@ def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def q_asof_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time lookup per (doc_id, source) with fallback defaults."""
-    out = asof_join(
-        _sequences(spark, sf_dir),
-        _probes(spark, sf_dir),
-        keys=["doc_id", "source"],
-        payload_cols=["tokens", "n_tok"],
-        defaults={"tokens": _empty_tokens(), "n_tok": F.lit(-1)},
-    )
-    return out.select(
+def _asof_tokens_answer(answers: DataFrame) -> DataFrame:
+    """The per-(doc_id, source) token as-of answer shape, shared by the
+    batch and streaming as-of queries (DuckDB twin: ``_ASOF_TOKENS_SELECT``)."""
+    return answers.select(
         "probe_id", "doc_id", "source", "ts_epoch",
         "asof_event_epoch",
         _csv("asof_tokens").alias("asof_tokens_csv"),
@@ -284,16 +278,40 @@ def q_asof_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ASOF_PER_SOURCE = (
-    duck_with(SEQUENCES_DUCK, PROBES_DUCK)
-    + """
+def _asof_tokens(spark: SparkSession, sf_dir: str, **asof_kw) -> DataFrame:
+    """Token as-of of the probes against the sequences per (doc_id, source),
+    with fallback defaults; ``asof_kw`` sets direction/tolerance."""
+    return _asof_tokens_answer(
+        asof_join(
+            _sequences(spark, sf_dir),
+            _probes(spark, sf_dir),
+            keys=["doc_id", "source"],
+            payload_cols=["tokens", "n_tok"],
+            defaults={"tokens": _empty_tokens(), "n_tok": F.lit(-1)},
+            **asof_kw,
+        )
+    )
+
+
+def q_asof_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time lookup per (doc_id, source) with fallback defaults."""
+    return _asof_tokens(spark, sf_dir)
+
+
+# the select list of ``_asof_tokens_answer``, shared by the token as-of oracles
+_ASOF_TOKENS_SELECT = """
 SELECT p.probe_id, p.doc_id, p.source, p.ts_epoch,
        s.event_epoch AS asof_event_epoch,
        coalesce(array_to_string(s.tokens, ','), '') AS asof_tokens_csv,
        coalesce(s.n_tok, -1) AS asof_n_tok,
        p.ts_epoch - s.event_epoch AS asof_age_sec,
        s.event_epoch IS NULL AS fallback_used
-FROM probes p
+"""
+
+ORACLE_ASOF_PER_SOURCE = (
+    duck_with(SEQUENCES_DUCK, PROBES_DUCK)
+    + _ASOF_TOKENS_SELECT
+    + """FROM probes p
 ASOF LEFT JOIN sequences s
   ON p.doc_id = s.doc_id AND p.source = s.source AND p.ts_epoch >= s.event_epoch
 """
@@ -347,33 +365,13 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     after each probe — pandas merge_asof's forward direction, for
     next-arrival lookups.  Same single-shuffle union + running-last plan,
     traversed in descending time order; asof_age_sec <= 0 on matches."""
-    out = asof_join(
-        _sequences(spark, sf_dir),
-        _probes(spark, sf_dir),
-        keys=["doc_id", "source"],
-        payload_cols=["tokens", "n_tok"],
-        defaults={"tokens": _empty_tokens(), "n_tok": F.lit(-1)},
-        direction="forward",
-    )
-    return out.select(
-        "probe_id", "doc_id", "source", "ts_epoch",
-        "asof_event_epoch",
-        _csv("asof_tokens").alias("asof_tokens_csv"),
-        "asof_n_tok", "asof_age_sec",
-        "fallback_used",
-    )
+    return _asof_tokens(spark, sf_dir, direction="forward")
 
 
 ORACLE_ASOF_FORWARD = (
     duck_with(SEQUENCES_DUCK, PROBES_DUCK)
-    + """
-SELECT p.probe_id, p.doc_id, p.source, p.ts_epoch,
-       s.event_epoch AS asof_event_epoch,
-       coalesce(array_to_string(s.tokens, ','), '') AS asof_tokens_csv,
-       coalesce(s.n_tok, -1) AS asof_n_tok,
-       p.ts_epoch - s.event_epoch AS asof_age_sec,
-       s.event_epoch IS NULL AS fallback_used
-FROM probes p
+    + _ASOF_TOKENS_SELECT
+    + """FROM probes p
 LEFT JOIN sequences s
   ON p.doc_id = s.doc_id AND p.source = s.source
  AND s.event_epoch >= p.ts_epoch
@@ -390,33 +388,13 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-staleness as-of: a match older than the tolerance is treated
     as no-match (defaults + fallback) — merge_asof's tolerance semantics,
     applied after the fill at zero extra shuffle cost."""
-    out = asof_join(
-        _sequences(spark, sf_dir),
-        _probes(spark, sf_dir),
-        keys=["doc_id", "source"],
-        payload_cols=["tokens", "n_tok"],
-        defaults={"tokens": _empty_tokens(), "n_tok": F.lit(-1)},
-        tolerance_sec=ASOF_TOL_SEC,
-    )
-    return out.select(
-        "probe_id", "doc_id", "source", "ts_epoch",
-        "asof_event_epoch",
-        _csv("asof_tokens").alias("asof_tokens_csv"),
-        "asof_n_tok", "asof_age_sec",
-        "fallback_used",
-    )
+    return _asof_tokens(spark, sf_dir, tolerance_sec=ASOF_TOL_SEC)
 
 
 ORACLE_ASOF_TOLERANCE = (
     duck_with(SEQUENCES_DUCK, PROBES_DUCK)
-    + f"""
-SELECT p.probe_id, p.doc_id, p.source, p.ts_epoch,
-       s.event_epoch AS asof_event_epoch,
-       coalesce(array_to_string(s.tokens, ','), '') AS asof_tokens_csv,
-       coalesce(s.n_tok, -1) AS asof_n_tok,
-       p.ts_epoch - s.event_epoch AS asof_age_sec,
-       s.event_epoch IS NULL AS fallback_used
-FROM probes p
+    + _ASOF_TOKENS_SELECT
+    + f"""FROM probes p
 LEFT JOIN sequences s
   ON p.doc_id = s.doc_id AND p.source = s.source
  AND s.event_epoch <= p.ts_epoch
@@ -1107,6 +1085,7 @@ def q_streaming_asof_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from uncharted_ta1_spark.streaming.asof_serve import serve_probe_stream
+    from uncharted_ta1_spark.streaming.sessions import await_drain
 
     seq = _sequences(spark, sf_dir)
     # Stage the probe arrival ONCE per (sf_dir) and reuse across calls —
@@ -1153,14 +1132,8 @@ def q_streaming_asof_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink=sink,
             checkpoint_dir=ckpt,
         )
-        q.awaitTermination()
-        got = spark.read.parquet(out_dir).select(
-            "probe_id", "doc_id", "source", "ts_epoch",
-            "asof_event_epoch",
-            _csv("asof_tokens").alias("asof_tokens_csv"),
-            "asof_n_tok", "asof_age_sec",
-            "fallback_used",
-        )
+        await_drain(q)
+        got = _asof_tokens_answer(spark.read.parquet(out_dir))
         # answers live under the temp dir: move the already-written parquet
         # aside (atexit-reclaimed) instead of collecting 10^5 rows through
         # the Python driver and re-parallelizing them

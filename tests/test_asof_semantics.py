@@ -44,7 +44,14 @@ def tiny(spark):
     return state, probes
 
 
-def _run(state, probes, **kw):
+@pytest.fixture(params=[False, True], ids=["single_window", "thin"])
+def via_join(request):
+    """Both payload strategies of the one as-of core: the payload in the
+    filled struct, or the thin anchor plus the payload join-back."""
+    return request.param
+
+
+def _run(state, probes, via_join, **kw):
     out = asof_join(
         state,
         probes,
@@ -52,32 +59,54 @@ def _run(state, probes, **kw):
         payload_cols=["payload"],
         tiebreak_cols=["payload"],
         defaults={"payload": F.lit(-1)},
+        fetch_payload_via_join=via_join,
         **kw,
     )
     return {r.probe_id: r for r in out.collect()}
 
 
-def test_inclusive_tie_and_tiebreak(spark, tiny):
-    res = _run(*tiny)
+def test_inclusive_tie_and_tiebreak(spark, tiny, via_join):
+    res = _run(*tiny, via_join)
     assert res["p1"].asof_payload == 201  # inclusive + greatest tiebreak wins
     assert res["p1"].asof_event_epoch == 20
     assert res["p6"].asof_payload == 500
     assert res["p6"].asof_age_sec == 0
 
 
-def test_between_and_isolation(spark, tiny):
-    res = _run(*tiny)
+def test_between_and_isolation(spark, tiny, via_join):
+    res = _run(*tiny, via_join)
     assert res["p2"].asof_payload == 100  # never the future row at 20
     assert res["p4"].asof_payload == 150  # source groups are isolated
 
 
-def test_fallback(spark, tiny):
-    res = _run(*tiny)
+def test_fallback(spark, tiny, via_join):
+    res = _run(*tiny, via_join)
     for p in ("p3", "p5"):
         assert res[p].fallback_used
         assert res[p].asof_payload == -1
         assert res[p].asof_event_epoch is None
         assert res[p].asof_age_sec is None
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_null_state_ts_never_matches(spark, via_join, direction):
+    """A state row with no timestamp has no place in time: it answers no
+    probe, under either payload strategy and in either direction."""
+    state = spark.createDataFrame(
+        [("d1", "s1", None, 7), ("d1", "s1", 5, 8)],
+        "doc_id string, source string, event_epoch long, payload long",
+    )
+    probes = spark.createDataFrame(
+        [("p3", "d1", "s1", 3), ("p6", "d1", "s1", 6)],
+        "probe_id string, doc_id string, source string, ts_epoch long",
+    )
+    res = _run(state, probes, via_join, direction=direction)
+    hit, miss = ("p6", "p3") if direction == "backward" else ("p3", "p6")
+    assert res[hit].asof_payload == 8 and res[hit].asof_event_epoch == 5
+    assert not res[hit].fallback_used
+    assert res[miss].fallback_used
+    assert res[miss].asof_payload == -1
+    assert res[miss].asof_event_epoch is None
 
 
 def test_no_temporal_leakage_full(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from uncharted_ta1_spark import datagen
 from uncharted_ta1_spark.operators.sessionize import session_aggs, sessionize
@@ -154,6 +155,23 @@ def test_streaming_asof_serve_equals_batch(spark, tmp_path):
     ).select(*got.columns)
     assert got.count() == prb.count()
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_drain_wait_is_bounded(spark, tmp_path, monkeypatch):
+    """A drain that outlasts ``DRAIN_TIMEOUT_SEC`` is stopped and raises
+    ``TimeoutError`` instead of blocking forever — through the replay
+    helper and through the streaming as-of query, which share the bound."""
+    import __spark_entry__ as E
+    from uncharted_ta1_spark.streaming import sessions
+
+    before = {q.id for q in spark.streams.active}
+    monkeypatch.setattr(sessions, "DRAIN_TIMEOUT_SEC", 0.001)  # 1 ms: no drain fits
+    stream = sessionized_stream(events_stream(spark, _stage_events(spark, tmp_path, 2)))
+    with pytest.raises(TimeoutError):
+        run_available_now(stream, checkpoint_dir=str(tmp_path / "ckpt_to"), query_name="s_to")
+    with pytest.raises(TimeoutError):
+        E.q_streaming_asof_serve(spark, SF)
+    assert {q.id for q in spark.streams.active} <= before
 
 
 def test_merge_time_travel(spark, tmp_path):

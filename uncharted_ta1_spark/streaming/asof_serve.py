@@ -19,10 +19,10 @@ pruned state plus the batch.  A broadcast semi join on the batch's keys
 prunes the state before the shuffle; it cannot prune the scan, since a
 keyed table bucketed on its full key (e.g. ``(doc_id, source, seq_no)``)
 spreads every ``(doc_id, source)`` over all buckets.  Because serving
-state is always pruned to the probed keys, the lookup runs the as-of
-join's single-window core (the payload rides in the filled struct), not
-the thin-anchor path with its second state scan and payload join-back
-that bulk backfills over unpruned state need.
+state is always pruned to the probed keys, the lookup picks the as-of
+join's single-window payload strategy (the payload rides in the filled
+struct), not the thin anchor with its second state scan and payload
+join-back that bulk backfills over unpruned state need.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ def asof_answer_batch(
     The state is pruned to the batch's keys by a broadcast left-semi join
     (a semi join emits each state row at most once, so duplicate batch keys
     need no ``distinct``).  The pruned state is what makes the single-window
-    as-of core cheap here, so it is chosen explicitly.
+    payload strategy cheap here, so it is chosen explicitly.
     """
     pruned = state.join(F.broadcast(probe_batch.select(*keys)), keys, "left_semi")
     return asof_join(

@@ -20,6 +20,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+# upper bound on one availableNow drain: a drain that stalls (a hung
+# source, a sink that never returns) fails instead of blocking its caller
+DRAIN_TIMEOUT_SEC = 600
+
+
+def await_drain(q: StreamingQuery) -> None:
+    """Wait for an availableNow query to finish; past ``DRAIN_TIMEOUT_SEC``
+    stop it and raise ``TimeoutError``."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_SEC):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not drain in {DRAIN_TIMEOUT_SEC} s"
+        )
 
 
 def events_stream(
@@ -86,7 +101,8 @@ def run_available_now(
     state_partitions: int | None = None,
 ) -> None:
     """Drain everything currently available (the batch-replay trigger, ST4)
-    into an in-memory sink and stop — deterministic for tests.
+    into an in-memory sink and stop — deterministic for tests.  The wait is
+    bounded by :func:`await_drain`.
 
     ``complete`` for aggregations (emits the final state regardless of
     watermark holds); ``append`` for stateless/dedup streams (rows are
@@ -114,7 +130,7 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        await_drain(q)
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old)
